@@ -686,7 +686,7 @@ object SparkEntry {
       // A/B measured stride 8 SLOWER (5.00 vs 4.55 s isolated warm —
       // the 7 E_k precompute join jobs cost more than the 8 saved
       // sweeps); the win came from narrowing the per-sweep plumbing
-      // instead (see hopDistancesDeduped's tiny-regime conf scope).
+      // instead (see hopDistancesDeduped's TinyScope).
       GraphOps.hopDistances(e, seeds, HopDeepMax, hopStride = 16,
           localThreshold = 0L)
         .orderBy("vertex")

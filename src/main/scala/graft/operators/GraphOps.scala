@@ -179,20 +179,30 @@ object GraphOps {
     * reduce-side strategy; AQE may still broadcast a small side, which
     * only improves it.
     */
-  def trianglesRS(e0: DataFrame, max: Long = 50L): DataFrame = {
-    // The compact weighted relation feeds all three join branches —
-    // persist it so the (scan → join → aggregate) prefix runs once, not
-    // three times. Bounded by distinct filtered edges.
-    val e = graft.Caches.track(weightedEdges(filterMaxId(e0, max))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val ab = e.select(col("src").as("x"), col("dst").as("y"), col("w").as("w1"))
-    val bc = e.select(col("src").as("y"), col("dst").as("z"), col("w").as("w2"))
-    val ca = e.select(col("dst").as("x"), col("src").as("z"), col("w").as("w3"))
-    val paths = ab.join(bc, "y").filter(col("x") =!= col("z"))
-    countDiv3(
-      paths.join(ca, Seq("x", "z"))
-        .agg(coalesce(sum(col("w1") * col("w2") * col("w3")), lit(0L)).as("cnt")))
+  def trianglesRS(e0: DataFrame, max: Long = 50L): DataFrame =
+    countDiv3(triangleLegs(e0, max).cycles
+      .agg(coalesce(sum(col("w1") * col("w2") * col("w3")), lit(0L)).as("cnt")))
+
+  /** The triangle pipelines' shared legs: the weighted core of the
+    * max-id-filtered edges (persisted — all three branches read it, so
+    * the scan → aggregate prefix runs once) and its projections `ab`
+    * (x→y, w1), `bc` (y→z, w2) and `ca` (the closing z→x, w3).
+    */
+  private final class TriangleLegs(val core: DataFrame) {
+    val ab = core.select(col("src").as("x"), col("dst").as("y"), col("w").as("w1"))
+    val bc = core.select(col("src").as("y"), col("dst").as("z"), col("w").as("w2"))
+    val ca = core.select(col("dst").as("x"), col("src").as("z"), col("w").as("w3"))
+
+    /** Closed 3-cycles anchored at x, under RS's x ≠ z wedge guard. */
+    def cycles: DataFrame =
+      ab.join(bc, "y").filter(col("x") =!= col("z")).join(ca, Seq("x", "z"))
   }
+
+  private def triangleLegs(e0: DataFrame, max: Long,
+      inclusive: Boolean = false): TriangleLegs =
+    new TriangleLegs(graft.Caches.track(
+      weightedEdges(filterMaxId(e0, max, inclusive))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
 
   /** Directed triangle count, replicated/broadcast strategy —
     * ReplicatedJoinDriver. Faithful semantic differences vs trianglesRS
@@ -221,8 +231,7 @@ object GraphOps {
     * of a driver OOM on a hint the data outgrew.
     */
   def trianglesRep(e0: DataFrame, max: Long = 40L): DataFrame = {
-    val e = graft.Caches.track(weightedEdges(filterMaxId(e0, max, inclusive = true))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val legs = triangleLegs(e0, max, inclusive = true)
     // read through the OWNING session's conf, not the thread-active
     // SQLConf.get — in multi-session apps the wrong session's threshold
     // could otherwise decide the broadcast hint
@@ -231,14 +240,11 @@ object GraphOps {
     // ~48 B/row: 3 longs in an UnsafeRow plus broadcast-collection
     // overhead, rounded up — the count materializes the persisted
     // relation the branches below reuse anyway
-    val fits = threshold > 0L && e.count() * 48L <= threshold
+    val fits = threshold > 0L && legs.core.count() * 48L <= threshold
     def rep(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
-    val ab = e.select(col("src").as("x"), col("dst").as("y"), col("w").as("w1"))
-    val bc = e.select(col("src").as("y"), col("dst").as("z"), col("w").as("w2"))
-    val closing = e.select(col("dst").as("x"), col("src").as("z"))
     countDiv3(
-      ab.join(rep(bc), "y")
-        .join(rep(closing), Seq("x", "z"), "left_semi")
+      legs.ab.join(rep(legs.bc), "y")
+        .join(rep(legs.ca.select("x", "z")), Seq("x", "z"), "left_semi")
         .agg(coalesce(sum(col("w1") * col("w2")), lit(0L)).as("cnt")))
   }
 
@@ -251,23 +257,13 @@ object GraphOps {
     * global count (one per rotation), which is exactly the invariant
     * the spec pins against `trianglesRS`.
     *
-    * Physical: the same weighted three-branch join pipeline as
-    * `trianglesRS` (one persisted distinct-edge relation feeding all
-    * branches), with the final aggregation keyed by the anchor
-    * vertex instead of global — same shuffles plus one vertex-keyed
-    * aggregation whose output is vertex-sized.
+    * Physical: `trianglesRS`'s join legs with the final aggregation
+    * keyed by the anchor vertex — one extra, vertex-sized exchange.
     */
-  def trianglesPerVertex(e0: DataFrame, max: Long = 50L): DataFrame = {
-    val e = graft.Caches.track(weightedEdges(filterMaxId(e0, max))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val ab = e.select(col("src").as("x"), col("dst").as("y"), col("w").as("w1"))
-    val bc = e.select(col("src").as("y"), col("dst").as("z"), col("w").as("w2"))
-    val ca = e.select(col("dst").as("x"), col("src").as("z"), col("w").as("w3"))
-    ab.join(bc, "y").filter(col("x") =!= col("z"))
-      .join(ca, Seq("x", "z"))
+  def trianglesPerVertex(e0: DataFrame, max: Long = 50L): DataFrame =
+    triangleLegs(e0, max).cycles
       .groupBy(col("x").as("vertex"))
       .agg(sum(col("w1") * col("w2") * col("w3")).as("triangles"))
-  }
 
   /** Fixed-point scale for `clusteringCoefficient` (same convention as
     * `rank_fp`/`tfidf_fp`).
@@ -664,6 +660,8 @@ object GraphOps {
     * SYMMETRIC fixpoint rows and their count — the `undSimple` state
     * contract the callers continue with (spec-pinned local ≡
     * distributed on both kCore and coreness).
+    * A/B: graph_kcore / graph_coreness 1.86 / 1.03 s vs 5.43 / 4.01 s
+    * in TinyScope (warm, sf0.1, 4 cores).
     */
   private def peelToLocalTail(s: SparkSession, pairs: Array[(Long, Long)],
       k: Int, rounds0: Int, maxRounds: Int): (DataFrame, Long) = {
@@ -872,19 +870,14 @@ object GraphOps {
     * fixpoint's `(src, dst, support)` rows, src < dst — byte-identical
     * to the distributed output (spec-pinned with `localMax = 0` vs
     * `Long.MaxValue` on the same graph).
+    * A/B: graph_ktruss 0.45 s vs 6.19 s in TinyScope (warm, sf0.1, 4 cores).
     */
   private def kTrussLocalTail(s: SparkSession, pairs: Array[(Long, Long)],
       k: Int, rounds0: Int, maxRounds: Int): DataFrame = {
     import s.implicits._
-    // ROUND-21: primitive-array peel — the immutable-Set form was
-    // written for the ≤ 33 k-edge tail and its per-round Map/Set
-    // allocation dominated once the raised gate let the WHOLE peel run
-    // here. Vertex ids are index-compressed once; adjacency is sorted
-    // int arrays rebuilt per round (the state only shrinks); support
-    // is a sorted-merge intersection count per edge. Semantics are
-    // UNCHANGED from the set form (round-synchronous, converge when
-    // nothing peels, raise past maxRounds) — spec-pinned equal to the
-    // distributed loop.
+    // primitive-array peel: vertex ids are index-compressed once;
+    // adjacency is sorted int arrays rebuilt per round (the state only
+    // shrinks); support is a sorted-merge intersection count per edge.
     val verts: Array[Long] =
       pairs.flatMap(p => Array(p._1, p._2)).distinct.sorted
     val idx = new java.util.HashMap[Long, Integer](verts.length * 2)
@@ -1244,10 +1237,7 @@ object GraphOps {
     * distributed loop (~40 ms per exchange under AQE — measured on
     * the hop gates). Transient adjacency maps stay a few hundred MB,
     * far under the 8g floor every regime here runs with; the hard
-    * `require` cap (1 << 25) still bounds the collect. The earlier
-    * 250k bound predates the per-exchange overhead measurement and
-    * left 0.5–6M-edge graphs paying seconds of scheduling for
-    * milliseconds of work.
+    * `require` cap (1 << 25) still bounds the collect.
     */
   val SccLocalEdges = 2000000L
 
@@ -1413,6 +1403,8 @@ object GraphOps {
     * blow the JVM stack recursively), min member id as the component
     * label (Tarjan's grouping, the min-id relabel of each popped
     * component). Self-loops and duplicates are no-ops.
+    * A/B: graph_scc / graph_scc_dag 0.30 / 0.57 s vs 3.42 / 3.80 s in
+    * TinyScope (warm, sf0.1, 4 cores).
     */
   private def tarjanLocal(
       it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
@@ -1569,6 +1561,7 @@ object GraphOps {
     * explicit stack (no recursion-depth bound), on-path cycle
     * detection (an in-progress parent reached again = a cycle: raise
     * the same not-a-DAG error the distributed loop gives, immediately).
+    * A/B: graph_scc_levels 0.75 s vs 4.47 s in TinyScope (warm, sf0.1, 4 cores).
     */
   private def levelsLocal(
       it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
@@ -1715,6 +1708,7 @@ object GraphOps {
     * seed SET over paths of ≤ `maxHops` edges — seeds at 0 (isolated
     * seeds included, the distributed frame's contract), early exit on
     * an empty frontier.
+    * A/B: graph_hops 1.06 s vs 4.00 s in TinyScope (warm, sf0.1, 4 cores).
     */
   private def hopsLocal(s: SparkSession, pairs: Array[(Long, Long)],
       seeds: Array[Long], maxHops: Int): DataFrame = {
@@ -1757,153 +1751,134 @@ object GraphOps {
     // sweeps the plain persisted input. Same sizing you'd do on a
     // cluster: partition count follows data size, not the session
     // default.
-    val (edges, targetParts) =
-      if (hopStride == 1) (big, 0L)
-      else {
-        // the count is usually BANKED by the distinct-edge memo — a
-        // caller that already knows it passes it in, skipping one
-        // count job + plan per invocation
-        val nEdges = if (knownCount >= 0L) knownCount else big.count()
-        val parts = math.max(1L, nEdges / 32768L)
-        // no re-cached coalesced copy anymore: after the E≤s relation
-        // is built (itself coalesced to `parts`), the sweeps scan ONLY
-        // that relation — the raw cache is read exactly once, inside
-        // the build's coalesced tasks, so a right-sized copy of the
-        // input would be one extra plan + job + resident copy per
-        // invocation for nothing.
-        (big, parts)
-      }
-    // TINY-REGIME PLUMBING SCOPE: in the deep-stride regime over a
-    // sub-128k-edge relation the per-super-sweep cost is pure fixed
-    // overhead — 32-bucket shuffles and AQE's per-stage re-planning
-    // on single-partition data. Narrow both for the duration of the
-    // loop (1 shuffle partition, AQE off, whole-stage codegen off —
-    // the dominant cost was janino COMPILING fresh classes every
-    // sweep, since each sweep's plan embeds new hop literals and a
-    // wider dist union) and restore on exit; the returned relation is
-    // checkpointed, so downstream consumers plan under the caller's
-    // restored confs. Measured on the deep gate: 4.55 → 2.89 s
-    // isolated warm, identical rows (broadcast-hinting the frames and
-    // stride 8 were both tried and measured SLOWER — 4.38 / 5.00). A
+    // The sweeps scan ONLY the E≤s relation (itself coalesced to
+    // `targetParts`), so the raw cache is read once, inside the build's
+    // coalesced tasks: a right-sized copy of the input would be one
+    // extra plan + job + resident copy per invocation for nothing. The
+    // count is usually BANKED by the distinct-edge memo — a caller that
+    // already knows it passes it in, skipping one count job + plan.
+    val targetParts =
+      if (hopStride == 1) 0L
+      else math.max(1L,
+        (if (knownCount >= 0L) knownCount else big.count()) / 32768L)
+    // TINY-REGIME SCOPE: in the deep-stride regime over at most ~98k
+    // edges (targetParts ≤ 2) the per-super-sweep cost is pure fixed
+    // overhead — 32-bucket shuffles and AQE's per-stage re-planning on
+    // single-partition data — so the sweeps run in a `TinyScope`, with
+    // whole-stage codegen off too: each sweep's plan embeds new hop
+    // literals and a wider dist union, so janino COMPILED fresh classes
+    // every sweep. Its checkpoint IS the final compaction. Measured on
+    // the deep gate: 4.55 → 2.89 s isolated warm, identical rows. A
     // big-graph call (stride 1, or edges past the sizing bound) never
-    // enters this scope — there the shuffle width, AQE and codegen
-    // are load-bearing.
-    val sess = big.sparkSession
+    // enters it — there the shuffle width, AQE and codegen carry load.
     val tinyScope = hopStride > 1 && targetParts <= 2
-    val prevAqe = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    val prevShuf = sess.conf.get("spark.sql.shuffle.partitions", "32")
-    val prevWsc = sess.conf.get("spark.sql.codegen.wholeStage", "true")
-    if (tinyScope) {
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
-      sess.conf.set("spark.sql.shuffle.partitions", "1")
-      // every sweep's plan embeds fresh literals (hop offset) and a
-      // wider dist union, so whole-stage codegen COMPILES new classes
-      // each sweep — janino time, not data time. Interpreted eval on
-      // a handful of rows is strictly cheaper here.
-      sess.conf.set("spark.sql.codegen.wholeStage", "false")
-    }
-    try {
-    // the multi-hop relation for stride > 1 (see docstring): E≤s =
-    // distinct (src, dst, k) k-step pairs for k = 1..s, built by
-    // DOUBLING — E≤(m+j) = E≤m ∪ (E_m ∘ E≤j, k += m) with j =
-    // min(m, s−m): every k-step walk with k > m splits at position m
-    // into an exactly-m prefix (∈ E_m) and a (k−m ≤ m)-step suffix
-    // (∈ E≤j). ⌈log₂ s⌉ materialized joins instead of the former s−1
-    // sequential self-joins (the r17 A/B that made stride 8 LOSE was
-    // paying 7 chained builds; doubling pays 3). Each doubling round
-    // materializes the full E≤m union right-sized like the edge
-    // cache, releasing the previous round's frame. Stride 1
-    // degenerates to the plain edge relation at k = 1; a budget below
-    // the stride caps the precompute.
-    val effStride = math.min(hopStride, math.max(maxHops, 1))
-    val hopRel: DataFrame =
-      if (effStride == 1) edges.withColumn("k", lit(1L))
-      else {
-        var cur = edges.withColumn("k", lit(1L))
-        var curOwned: DataFrame = null // persisted intermediate to release
-        var m = 1
-        while (m < effStride) {
-          val j = math.min(m, effStride - m)
-          val suffix = if (j == m) cur
-            else cur.filter(col("k") <= lit(j.toLong))
-          val ext = cur.filter(col("k") === lit(m.toLong)).as("a")
-            .join(suffix.as("b"), col("a.dst") === col("b.src"))
-            .select(col("a.src").as("src"), col("b.dst").as("dst"),
-              (col("b.k") + lit(m.toLong)).as("k"))
-            .distinct()
-          val lazyNext = cur.unionByName(ext)
-          m += j
-          // tiny regime: keep the doubling LAZY and materialize the
-          // final E≤s once — each doubling's plan embeds the previous
-          // round twice (as the E_m slice and as the suffix), so the
-          // fused tree recomputes duplicated subtrees, which on
-          // sub-128k-edge single-partition data costs microseconds
-          // while saving a driver plan + job per round (the measured
-          // wall here is catalyst, not tasks). A big graph (no
-          // tinyScope) materializes per round as before — there the
-          // duplicated recompute would be real work.
-          if (!tinyScope || m >= effStride) {
-            val next = graft.Caches.track(lazyNext
-              .coalesce(math.max(targetParts, 1L).toInt)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-            next.count()
-            if (curOwned != null) curOwned.unpersist(blocking = false)
-            cur = next
-            curOwned = next
-          } else cur = lazyNext
+    // the checkpointed layer frames of the distance union, owned here
+    // and released once the returned relation is materialized
+    var layers = List.empty[DataFrame]
+    def sweeps(edges: DataFrame, sources: DataFrame): DataFrame = {
+      // the multi-hop relation for stride > 1 (see docstring): E≤s =
+      // distinct (src, dst, k) k-step pairs for k = 1..s, built by
+      // DOUBLING — E≤(m+j) = E≤m ∪ (E_m ∘ E≤j, k += m) with j =
+      // min(m, s−m): every k-step walk with k > m splits at position m
+      // into an exactly-m prefix (∈ E_m) and a (k−m ≤ m)-step suffix
+      // (∈ E≤j). ⌈log₂ s⌉ materialized joins instead of the former s−1
+      // sequential self-joins (the r17 A/B that made stride 8 LOSE was
+      // paying 7 chained builds; doubling pays 3). Each doubling round
+      // materializes the full E≤m union right-sized like the edge
+      // cache, releasing the previous round's frame. Stride 1
+      // degenerates to the plain edge relation at k = 1; a budget below
+      // the stride caps the precompute.
+      val effStride = math.min(hopStride, math.max(maxHops, 1))
+      val hopRel: DataFrame =
+        if (effStride == 1) edges.withColumn("k", lit(1L))
+        else {
+          var cur = edges.withColumn("k", lit(1L))
+          var curOwned: DataFrame = null // persisted intermediate to release
+          var m = 1
+          while (m < effStride) {
+            val j = math.min(m, effStride - m)
+            val suffix = if (j == m) cur
+              else cur.filter(col("k") <= lit(j.toLong))
+            val ext = cur.filter(col("k") === lit(m.toLong)).as("a")
+              .join(suffix.as("b"), col("a.dst") === col("b.src"))
+              .select(col("a.src").as("src"), col("b.dst").as("dst"),
+                (col("b.k") + lit(m.toLong)).as("k"))
+              .distinct()
+            val lazyNext = cur.unionByName(ext)
+            m += j
+            // tiny regime: keep the doubling LAZY and materialize the
+            // final E≤s once — each doubling's plan embeds the previous
+            // round twice (as the E_m slice and as the suffix), so the
+            // fused tree recomputes duplicated subtrees, which on
+            // sub-128k-edge single-partition data costs microseconds
+            // while saving a driver plan + job per round (the measured
+            // wall here is catalyst, not tasks). A big graph (no
+            // tinyScope) materializes per round as before — there the
+            // duplicated recompute would be real work.
+            if (!tinyScope || m >= effStride) {
+              val next = graft.Caches.track(lazyNext
+                .coalesce(math.max(targetParts, 1L).toInt)
+                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+              next.count()
+              if (curOwned != null) curOwned.unpersist(blocking = false)
+              cur = next
+              curOwned = next
+            } else cur = lazyNext
+          }
+          cur
         }
-        cur
+      val (seed, nSeeds) = ckCounted(sources.select(col("v")).distinct()
+        .withColumn("dist", lit(0L)))
+      // the distance relation is the UNION of checkpointed frames —
+      // never re-checkpointed per sweep (that would copy O(reached)
+      // rows every sweep; only the O(new layers) frame is new work). The
+      // union view is compacted every `HopCompactLayers` frames so plan
+      // width stays bounded at deep hop budgets.
+      layers = List(seed)
+      var dist = seed // lazy union over `layers`
+      var frontier = seed // sweep 0's "just reached" set IS the seed set
+      var hop = 0
+      var exhausted = maxHops == 0 || nSeeds == 0L
+      while (!exhausted) {
+        val steps = math.min(effStride, maxHops - hop)
+        // ONE join expands all `steps` layers; min(hop + k) elects each
+        // vertex's first touch; the checkpoint's forcing count doubles
+        // as the emptiness signal — no separate per-sweep job. The
+        // visited-set check is FOLDED into the election aggregation
+        // (§2.4 — one exchange instead of a groupBy exchange plus an
+        // anti-join): known vertices enter the union with sentinel −1,
+        // which wins every min (real candidates are hop + k ≥ 1), so
+        // filtering the sentinel out IS the anti-join — same
+        // reached-sized scan of `dist` the anti-join's probe build paid,
+        // one fewer shuffle stage per sweep, at any scale.
+        val reach = if (steps == effStride) hopRel
+          else hopRel.filter(col("k") <= lit(steps.toLong))
+        val (newLayers, nNew) = ckCounted(reach
+          .join(frontier.select(col("v").as("src")), "src")
+          .select(col("dst").as("v"), (col("k") + lit(hop.toLong)).as("dist"))
+          .unionByName(dist.select(col("v"), lit(-1L).as("dist")))
+          .groupBy("v").agg(min("dist").as("dist"))
+          .filter(col("dist") =!= lit(-1L)))
+        hop += steps
+        layers ::= newLayers
+        dist = dist.unionByName(newLayers)
+        // next super-sweep expands from the LAST layer only (vertices
+        // first reached at `hop`): every earlier layer in this frame was
+        // already expanded through E≤s within the same super-sweep
+        frontier = newLayers.filter(col("dist") === lit(hop.toLong))
+        if (layers.length >= HopCompactLayers) {
+          val compact = ck(dist)
+          layers.foreach(drop)
+          layers = List(compact)
+          dist = compact
+          // the frontier's frame was one of the dropped layers — recover
+          // it from the compacted relation (dist == hop ⇔ first reached
+          // at the last completed sweep)
+          frontier = compact.filter(col("dist") === lit(hop.toLong))
+        }
+        exhausted = hop == maxHops || nNew == 0L
       }
-    val (seed, nSeeds) = ckCounted(sources.select(col("v")).distinct()
-      .withColumn("dist", lit(0L)))
-    // the distance relation is the UNION of checkpointed frames —
-    // never re-checkpointed per sweep (that would copy O(reached)
-    // rows every sweep; only the O(new layers) frame is new work). The
-    // union view is compacted every `HopCompactLayers` frames so plan
-    // width stays bounded at deep hop budgets.
-    var layers = List(seed)
-    var dist = seed // lazy union over `layers`
-    var frontier = seed // sweep 0's "just reached" set IS the seed set
-    var hop = 0
-    var exhausted = maxHops == 0 || nSeeds == 0L
-    while (!exhausted) {
-      val steps = math.min(effStride, maxHops - hop)
-      // ONE join expands all `steps` layers; min(hop + k) elects each
-      // vertex's first touch; the checkpoint's forcing count doubles
-      // as the emptiness signal — no separate per-sweep job. The
-      // visited-set check is FOLDED into the election aggregation
-      // (§2.4 — one exchange instead of a groupBy exchange plus an
-      // anti-join): known vertices enter the union with sentinel −1,
-      // which wins every min (real candidates are hop + k ≥ 1), so
-      // filtering the sentinel out IS the anti-join — same
-      // reached-sized scan of `dist` the anti-join's probe build paid,
-      // one fewer shuffle stage per sweep, at any scale.
-      val reach = if (steps == effStride) hopRel
-        else hopRel.filter(col("k") <= lit(steps.toLong))
-      val (newLayers, nNew) = ckCounted(reach
-        .join(frontier.select(col("v").as("src")), "src")
-        .select(col("dst").as("v"), (col("k") + lit(hop.toLong)).as("dist"))
-        .unionByName(dist.select(col("v"), lit(-1L).as("dist")))
-        .groupBy("v").agg(min("dist").as("dist"))
-        .filter(col("dist") =!= lit(-1L)))
-      hop += steps
-      layers ::= newLayers
-      dist = dist.unionByName(newLayers)
-      // next super-sweep expands from the LAST layer only (vertices
-      // first reached at `hop`): every earlier layer in this frame was
-      // already expanded through E≤s within the same super-sweep
-      frontier = newLayers.filter(col("dist") === lit(hop.toLong))
-      if (layers.length >= HopCompactLayers) {
-        val compact = ck(dist)
-        layers.foreach(drop)
-        layers = List(compact)
-        dist = compact
-        // the frontier's frame was one of the dropped layers — recover
-        // it from the compacted relation (dist == hop ⇔ first reached
-        // at the last completed sweep)
-        frontier = compact.filter(col("dist") === lit(hop.toLong))
-      }
-      exhausted = hop == maxHops || nNew == 0L
+      dist
     }
     // final compaction: return ONE checkpointed relation, not a lazy
     // union over up to HopCompactLayers-1 live layer frames — a
@@ -1911,20 +1886,18 @@ object GraphOps {
     // block-store entries and carry a 15-wide union plan into every
     // downstream job. One reached-sized copy, then the layer frames
     // are released.
-    if (layers.length > 1) {
-      val compact = ck(dist)
-      layers.foreach(drop)
-      layers = List(compact)
-      dist = compact
-    }
-    dist.select(col("v").as("vertex"), col("dist"))
-    } finally {
-      if (tinyScope) {
-        sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
-        sess.conf.set("spark.sql.shuffle.partitions", prevShuf)
-        sess.conf.set("spark.sql.codegen.wholeStage", prevWsc)
+    val dist =
+      if (tinyScope)
+        org.apache.spark.sql.graft.ColumnBridge.TinyScope(
+            Seq(big, sources), wholeStageCodegen = false) {
+          case Seq(e, s) => sweeps(e, s)
+        }
+      else {
+        val d = sweeps(big, sources)
+        if (layers.length > 1) ck(d) else d
       }
-    }
+    if (dist ne layers.head) layers.foreach(drop)
+    dist.select(col("v").as("vertex"), col("dist"))
   }
 
   /** Sample size for `closenessSampled` — the k hash-chosen BFS
@@ -2273,6 +2246,7 @@ object GraphOps {
     // (left joins contribute only matched successors, coalesce 0),
     // order-free on exact longs. `localThreshold = 0` keeps the
     // distributed loop spec-covered.
+    // A/B: graph_stress 0.96 s vs 16.13 s in TinyScope (warm, sf0.1, 4 cores).
     if (dedup.count() <= localThreshold) {
       val s = e.sparkSession
       import s.implicits._
@@ -2411,6 +2385,7 @@ object GraphOps {
     * `maxRounds` synchronous min-combine rounds (early exit on a
     * round with no improvement — idempotence makes that identical),
     * seeds at 0, min path WEIGHT over ≤ maxRounds edges.
+    * A/B: graph_sssp 1.13 s vs 4.47 s in TinyScope (warm, sf0.1, 4 cores).
     */
   private def ssspLocal(s: SparkSession,
       wedges: Array[(Long, Long, Long)], seeds: Array[Long],
@@ -2475,6 +2450,8 @@ object GraphOps {
     // aggregation is the same order-free exact-long fold.
     // `localThreshold = 0` keeps the distributed labeled loop
     // spec-covered.
+    // A/B: graph_closeness_weighted 1.55 s vs 6.31 s in TinyScope (warm, sf0.1, 4
+    // cores).
     if (we.count() <= localThreshold) {
       val adj = we.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -2860,6 +2837,7 @@ object GraphOps {
     * fixed-point arithmetic (order-free long sums per half-round, L1
     * normalization by truncating division, zero-total rounds zero
     * everything) over the collected distinct edge list.
+    * A/B: graph_hits 0.41 s vs 4.17 s in TinyScope (warm, sf0.1, 4 cores).
     */
   private def hitsLocal(s: SparkSession, pairs: Array[(Long, Long)],
       rounds: Int): DataFrame = {
@@ -2933,6 +2911,7 @@ object GraphOps {
     // collected symmetric simple adjacency; the memo's banked count
     // makes the gate probe free. `localThreshold = 0` keeps the
     // distributed loop spec-covered.
+    // A/B: graph_lpa 0.40 s vs 2.01 s in TinyScope (warm, sf0.1, 4 cores).
     if (nSym <= localThreshold) {
       val s = e.sparkSession
       import s.implicits._
@@ -3008,6 +2987,7 @@ object GraphOps {
     // Louvain output), so the collect is vertex-sized whenever the
     // edge gate admits. Exact long arithmetic, order-free sums;
     // `localThreshold = 0` keeps the distributed shape spec-covered.
+    // A/B: graph_modularity 0.48 s vs 3.99 s in TinyScope (warm, sf0.1, 4 cores).
     // twin admission probes the LABEL side with a bounded limit-collect
     // (one job, no separate count): beyond `labCap` rows the collect
     // is cut short and the distributed path runs — an oversized labels
@@ -3130,10 +3110,8 @@ object GraphOps {
 
   /** `louvain` small-graph fast-path gate (the `sccComponents` /
     * `dupClusters` pattern): at or below this many SYMMETRIC simple
-    * rows the whole multi-level matching loop runs in ONE task —
-    * measured at sf0.1 (≈30k rows), the distributed loop's 6 levels
-    * cost ~0.75 s EACH in pure stage-scheduling overhead (~10
-    * exchanges per level over kilobyte data). Equality with the
+    * rows the whole multi-level matching loop runs in ONE task (see
+    * `louvainLocal` for the measured gap). Equality with the
     * distributed loop is property-pinned (`localThreshold = 0` forces
     * the loop in tests).
     */
@@ -3146,6 +3124,7 @@ object GraphOps {
     * hash maps instead of relations. Input: the symmetric simple edge
     * iterator (so |it| = nSym and m = |it|/2 exactly as the
     * distributed form's `nSym / 2`).
+    * A/B: graph_louvain_full 0.52 s vs 5.70 s in TinyScope (warm, sf0.1, 4 cores).
     */
   private def louvainLocal(it: Iterator[(Long, Long)],
       levels: Int): Iterator[(Long, Long)] = {

@@ -903,7 +903,7 @@ object Similarity {
   val BeamEntries = 8
   val BeamGraphDegree = 16
 
-  /** Corpus-size bound for `knnBeam`'s tiny-regime plumbing scope
+  /** Corpus-size bound for `knnBeamShared`'s `TinyScope`
     * (the `hopDistancesDeduped` lesson applied to the beam loop): at
     * or under this many corpus vectors the per-round cost is pure
     * fixed overhead — 32-bucket shuffles on a few-thousand-row
@@ -998,10 +998,10 @@ object Similarity {
     * graph-served tier: `knn_beam` and `knn_beam_recall`'s approx side
     * each re-ran the full `BeamRounds` loop per invocation. One
     * checkpoint-backed build per (graph plan, corpus plan, geometry)
-    * serves both; the build itself runs inside a tiny-regime plumbing
-    * scope when the corpus is under `BeamTinyCorpus` vectors (1
-    * shuffle partition + AQE off for the loop's ~10 micro-shuffles;
-    * whole-stage codegen stays ON — unlike the hops loop, the per-row
+    * serves both; the build itself runs inside a `TinyScope` (for
+    * the loop's ~10 micro-shuffles) when the corpus is under
+    * `BeamTinyCorpus` vectors. Whole-stage codegen stays ON — unlike
+    * the hops loop, the per-row
     * work here is a 64-dim float fold, and interpreted eval was
     * MEASURED 3x slower than the 4 janino compiles it avoids). The
     * corpus and query-batch plans ride the memo key as canonicalized
@@ -1018,22 +1018,13 @@ object Similarity {
       nQueries: Long = DefaultQueries): DataFrame = {
     beamMemo.getOrBuild(graph,
         s"beam|$k|$beam|$rounds|$nQueries", Seq(emb, queryEmb)) {
-      val sess = emb.sparkSession
-      val tinyScope = emb.count() <= BeamTinyCorpus
-      val prevAqe = sess.conf.get("spark.sql.adaptive.enabled", "true")
-      val prevShuf = sess.conf.get("spark.sql.shuffle.partitions", "32")
-      if (tinyScope) {
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
-        sess.conf.set("spark.sql.shuffle.partitions", "1")
-      }
-      try org.apache.spark.sql.graft.ColumnBridge.statsFreeLocalCheckpoint(
-        knnBeam(graph, emb, queryEmb, k, beam, rounds, nQueries))
-      finally {
-        if (tinyScope) {
-          sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
-          sess.conf.set("spark.sql.shuffle.partitions", prevShuf)
+      if (emb.count() <= BeamTinyCorpus)
+        org.apache.spark.sql.graft.ColumnBridge.TinyScope(
+            Seq(graph, emb, queryEmb)) { case Seq(g, e, q) =>
+          knnBeam(g, e, q, k, beam, rounds, nQueries)
         }
-      }
+      else org.apache.spark.sql.graft.ColumnBridge.statsFreeLocalCheckpoint(
+        knnBeam(graph, emb, queryEmb, k, beam, rounds, nQueries))
     }
   }
 

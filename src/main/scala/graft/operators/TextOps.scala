@@ -587,29 +587,18 @@ object TextOps {
     // file size + batch text bytes — a conservative overestimate of
     // the merge pool), so a real-scale index never enters: there the
     // shuffle width and AQE are load-bearing and the plan is returned
-    // untouched. Inside the scope the merge materializes once as a
-    // stats-free local checkpoint (1 shuffle partition, AQE off,
-    // confs restored on exit; blocks released when the query's cache
-    // lease drains — never reused across invocations).
-    val sess = storedIndex.sparkSession
+    // untouched. Below it the merge materializes once in a
+    // `TinyScope`, its checkpoint released when the query's cache
+    // lease drains (never reused across invocations).
     val est = storedIndex.queryExecution.optimizedPlan.stats.sizeInBytes +
       batch.queryExecution.optimizedPlan.stats.sizeInBytes
     if (est > DeltaTinyScopeBytes) merged
     else {
-      val prevShuf = sess.conf.get("spark.sql.shuffle.partitions", "200")
-      val prevAqe = sess.conf.get("spark.sql.adaptive.enabled", "true")
-      sess.conf.set("spark.sql.shuffle.partitions", "1")
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
-        val ckd = org.apache.spark.sql.graft.ColumnBridge
-          .statsFreeLocalCheckpoint(merged)
-        graft.Caches.onRelease(() =>
-          org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(ckd))
-        ckd
-      } finally {
-        sess.conf.set("spark.sql.shuffle.partitions", prevShuf)
-        sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      }
+      val ckd = org.apache.spark.sql.graft.ColumnBridge
+        .TinyScope(Seq(merged))(_.head)
+      graft.Caches.onRelease(() =>
+        org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(ckd))
+      ckd
     }
   }
 
