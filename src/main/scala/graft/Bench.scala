@@ -108,14 +108,15 @@ object Bench {
     // serve while rep 1 carries the build — `memo_build_s` records that
     // build cost per gate mechanically (deltas of PlanMemo.buildNanos
     // around each timed call, summed over reps), the warm/build split
-    // the ratchet needs to stay interpretable. Timed actions, reps and
-    // the JSON fields that existed before are unchanged.
-    val memoAcc = scala.collection.mutable.Map.empty[String, Double]
+    // the ratchet needs to stay interpretable. Memo hits and misses are
+    // attributed the same way, and the registry's held bytes, evictions
+    // and budget are read after each pass. Timed actions, reps and the
+    // JSON fields that existed before are unchanged.
+    val memo = new MemoTraffic
     val samples = sample(spark, sfDir, queries, reps, subSecond, subExtra,
-      memoAcc)
+      memo)
     val (stdoutJson, json, allFailed) =
-      render(queries.keys.toSeq, samples, reps, sfDir, provenance,
-        memoAcc.toMap)
+      render(queries.keys.toSeq, samples, reps, sfDir, provenance, memo)
     // WARM-REGRESSION ALARM: compare this run's warm medians against
     // the committed mirror (BENCH_BASELINE.json, or the file named by
     // SPARK_GRAFT_BENCH_BASELINE). The alarm is a loud stderr line per
@@ -284,13 +285,13 @@ object Bench {
   private[graft] def sample(spark: SparkSession, sfDir: String,
       queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame],
       reps: Int, extraFor: Set[String] = Set.empty,
-      extraPasses: Int = 0,
-      memoAcc: scala.collection.mutable.Map[String, Double] = null)
+      extraPasses: Int = 0, memo: MemoTraffic = null)
       : Seq[Map[String, Option[Double]]] = {
     def pass(qs: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame])
-        : Map[String, Option[Double]] =
-      qs.map { case (name, fn) =>
-        val m0 = PlanMemo.buildNanos.get()
+        : Map[String, Option[Double]] = {
+      val ev0 = PlanMemo.evictions.get()
+      val times = qs.map { case (name, fn) =>
+        val m0 = MemoUse.now
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).count(); true }
@@ -302,13 +303,13 @@ object Bench {
               false
           }
         val dt = (System.nanoTime() - t0) / 1e9
-        // memo-build seconds charged to THIS gate: whatever PlanMemo
-        // builds ran inside this timed call (summed across reps — a
-        // later-rep rebuild after LRU eviction is still build cost)
-        if (memoAcc != null) {
-          val db = (PlanMemo.buildNanos.get() - m0) / 1e9
-          if (db > 0) memoAcc.updateWith(name) {
-            prev => Some(prev.getOrElse(0.0) + db)
+        // memo traffic charged to THIS gate: whatever PlanMemo builds
+        // and lookups ran inside this timed call (summed across reps —
+        // a later-rep rebuild after eviction is still build cost)
+        if (memo != null) {
+          val du = MemoUse.now - m0
+          if (du != MemoUse(0, 0, 0)) memo.perGate.updateWith(name) {
+            prev => Some(prev.fold(du)(_ + du))
           }
         }
         // between timings: drop the finished query's caches so later
@@ -316,9 +317,42 @@ object Bench {
         Caches.clear(spark)
         name -> (if (ok) Some(dt) else None)
       }
+      // the registry's state once the pass is done (outside every
+      // timed call); the status store is filled by the listener bus
+      if (memo != null) {
+        val sc = spark.sparkContext
+        try org.apache.spark.sql.graft.ColumnBridge.waitListeners(spark)
+        catch { case scala.util.control.NonFatal(_) => () }
+        memo.passes += ((PlanMemo.heldBytes(sc),
+          PlanMemo.evictions.get() - ev0, PlanMemo.budget(sc)))
+      }
+      times
+    }
     val sub = queries.view.filterKeys(extraFor).toMap
     (1 to reps).map(_ => pass(queries)) ++
       (if (sub.isEmpty) Nil else (1 to extraPasses).map(_ => pass(sub)))
+  }
+
+  /** Memo traffic of timed calls: build seconds, hits, misses. */
+  private[graft] final case class MemoUse(buildS: Double, hits: Long,
+      misses: Long) {
+    def +(o: MemoUse): MemoUse =
+      MemoUse(buildS + o.buildS, hits + o.hits, misses + o.misses)
+    def -(o: MemoUse): MemoUse =
+      MemoUse(buildS - o.buildS, hits - o.hits, misses - o.misses)
+  }
+
+  private[graft] object MemoUse {
+    def now: MemoUse = MemoUse(PlanMemo.buildNanos.get() / 1e9,
+      PlanMemo.hitCount.get(), PlanMemo.missCount.get())
+  }
+
+  /** Per-gate memo traffic (summed over reps), and per pass the
+    * registry's (held bytes, evictions during the pass, budget).
+    */
+  private[graft] final class MemoTraffic {
+    val perGate = scala.collection.mutable.Map.empty[String, MemoUse]
+    val passes = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
   }
 
   /** JSON string escape for the hand-built artifact/stdout lines:
@@ -518,7 +552,7 @@ object Bench {
   private[graft] def render(names: Seq[String],
       samples: Seq[Map[String, Option[Double]]], reps: Int,
       sfDir: String, provenance: Map[String, String] = Map.empty,
-      memoBuild: Map[String, Double] = Map.empty)
+      memo: MemoTraffic = new MemoTraffic)
       : (String, String, Seq[String]) = {
     val okSamples: Map[String, Seq[Double]] =
       names.map(n => n -> samples.flatMap(_.get(n).flatten)).toMap
@@ -585,10 +619,16 @@ object Bench {
     // calls, summed over reps. See `build_s` for the stored-artifact
     // analog; the two are disjoint mechanisms (parquet round-trip digs
     // vs session checkpoint memos) and both exist to keep warm medians
-    // honest about one-time work.
-    val memoS = names.filter(n => memoBuild.getOrElse(n, 0.0) > 0)
-      .map(n => s"\"" + n + "\":" + memoBuild(n))
-      .mkString("{", ",", "}")
+    // honest about one-time work. `memo_hits` / `memo_misses` count the
+    // lookups the same way; `memo_bytes` / `memo_evictions` are per
+    // pass, read after the pass.
+    def memoField[V](f: MemoUse => V)(implicit num: Numeric[V]): String =
+      names.flatMap(n => memo.perGate.get(n).map(f)
+        .filter(num.signum(_) > 0).map(v => s"\"" + n + "\":" + v))
+        .mkString("{", ",", "}")
+    val memoS = memoField(_.buildS)
+    val memoHits = memoField(_.hits)
+    val memoMisses = memoField(_.misses)
     val total = med.values.filter(_ >= 0).sum
     // HEADLINE SPLIT: total_warm (summed warm medians — the honest
     // serving figure) vs build_total (summed first-rep excess — the
@@ -616,7 +656,11 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec",""" +
         s""""total_warm":$totalWarm,"build_total":$buildTotal,""" +
         s""""queries":$qs,"queries_warm":$warmJson,"build_s":$buildS,""" +
-        s""""memo_build_s":$memoS,""" +
+        s""""memo_build_s":$memoS,"memo_hits":$memoHits,""" +
+        s""""memo_misses":$memoMisses,""" +
+        s""""memo_bytes":${memo.passes.map(_._1).mkString("[", ",", "]")},""" +
+        s""""memo_evictions":${memo.passes.map(_._2).mkString("[", ",", "]")},""" +
+        s""""memo_budget":${memo.passes.lastOption.fold(0L)(_._3)},""" +
         s""""queries_minmax":$minmax,"errors":$errs,"reps":$reps,""" +
         s""""sf":"${esc(sfDir)}","provenance":$prov}"""
     (stdoutJson, json, allFailed)

@@ -1,133 +1,201 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.ColumnBridge
 
-/** Bounded memo of expensive relations keyed by (session, params,
-  * canonicalized input-plan OBJECT) — the session-level reuse layer
-  * behind the operators whose consumers arrive back to back over the
-  * SAME input: the Brandes σ layers (`graph_path_counts` →
+/** The session memo registry: one process-wide map of expensive
+  * relations that several gates consume back to back over the SAME
+  * input — the Brandes σ layers (`graph_path_counts` →
   * `graph_stress`), the labeled centrality sweep (`graph_closeness` →
   * `graph_eccentricity` → `graph_diameter`), the default ngram cluster
   * labelling (five dedup/curation gates), the corpus kNN graph
-  * (`knn_graph` → `knn_mutual` → the beam family). Values must be
-  * CHECKPOINT-BACKED (statsFreeLocalCheckpoint) so the per-query
-  * `Caches.clear` lease drain cannot evict them — the memo is
-  * session-lived by construction and dies with the JVM.
+  * (`knn_graph` → `knn_mutual` → the beam family), the stored-tier
+  * artifact dirs. Call sites name a `kind` and never size anything:
+  * retention is one global byte budget.
   *
-  * Keying discipline: the params string pins session identity
-  * (applicationId + session identity hash) and the operator's
-  * constants; the canonicalized ANALYZED PLAN is compared as an
-  * OBJECT, not a string — structural equality sees LocalRelation data
-  * and file-index roots, both of which plan strings elide, so a stale
-  * reuse across different inputs is structurally impossible rather
-  * than merely improbable. `slots` bounds retention (LRU) so a long
-  * session over many inputs cannot accumulate checkpoint blocks.
+  * Keying discipline: the key is the session (applicationId + session
+  * identity hash), `kind|params` (params must carry every constant the
+  * value depends on), and the canonicalized ANALYZED PLANS of every
+  * input, compared as OBJECTS, not strings — structural equality sees
+  * LocalRelation data and file-index roots, both of which plan strings
+  * elide, so a stale reuse across different inputs is structurally
+  * impossible rather than merely improbable.
   *
-  * Lifetime is REF-COUNTED, so no eviction policy can destroy a value
-  * out from under a consumer: the map holds one reference per entry,
-  * and every `getOrBuild` return takes another, released when the
-  * caller's `Caches` lease drains (the query-end signal — `scoped`
-  * exit or `Caches.clear`). LRU eviction and `clear()` only drop the
-  * MAP's reference; the checkpoint blocks are actually released when
-  * the last in-flight query that was handed the value finishes. A
-  * racing duplicate build still resolves FIRST-WRITE-WINS — the loser
-  * releases the value IT just built (provably unreferenced) and
-  * serves the incumbent under a fresh reference.
+  * Budget: an entry weighs the bytes of the checkpoint blocks its
+  * value holds (`sc.getRDDStorageInfo` over the value's checkpoint RDD
+  * ids — the values are statsFreeLocalCheckpoint-backed, so the
+  * per-query `Caches.clear` lease drain cannot evict them). The budget
+  * is the storage memory the block managers report
+  * (`sc.getExecutorMemoryStatus`): after every build, while the held
+  * bytes exceed it, the least recently used entry that holds blocks is
+  * evicted (never the one just built). A value that holds no blocks
+  * (a stored-dir path, a driver-side weight array) weighs 0 and is
+  * never evicted — evicting it frees nothing. Bytes are read from the
+  * status store, which the listener bus fills asynchronously, so the
+  * newest entry may weigh less than it will until the next build.
+  *
+  * Lifetime is REF-COUNTED, so eviction cannot destroy a value out
+  * from under a consumer: the map holds one reference per entry, and
+  * every `getOrBuild` return takes another, released when the caller's
+  * `Caches` lease drains (the query-end signal — `scoped` exit or
+  * `Caches.clear`). Eviction and `releaseAll` only drop the MAP's
+  * reference; the value's checkpoint blocks are unpersisted when the
+  * last in-flight query that was handed it finishes. A racing duplicate
+  * build resolves FIRST-WRITE-WINS — the loser releases the value IT
+  * just built (provably unreferenced) and serves the incumbent under a
+  * fresh reference.
   */
-final class PlanMemo[T](slots: Int,
-    release: T => Unit = (_: T) => ()) {
-  require(slots >= 1, s"slots must be >= 1, got $slots")
+object PlanMemo {
 
-  PlanMemo.register(this)
+  /** The checkpoint frames a memoized value holds: what its release
+    * unpersists and what its bytes are measured over.
+    */
+  final class Frames[T](val of: T => Seq[DataFrame])
+
+  object Frames {
+    implicit val frame: Frames[DataFrame] = new Frames(Seq(_))
+    implicit val counted: Frames[(DataFrame, Long)] = new Frames(v => Seq(v._1))
+    implicit val frames: Frames[Seq[DataFrame]] = new Frames(identity)
+    implicit val triple: Frames[(DataFrame, DataFrame, DataFrame)] =
+      new Frames(v => Seq(v._1, v._2, v._3))
+    implicit val path: Frames[String] = new Frames(_ => Nil)
+    implicit val weights: Frames[Array[Long]] = new Frames(_ => Nil)
+  }
 
   /** A memoized value plus its reference count. Starts at 1 — the
-    * map's own reference. `releaseRef` runs the destructor exactly
-    * once, when the count first reaches zero.
+    * map's own reference. The frames are released exactly once, when
+    * the count first reaches zero.
     */
-  private final class Entry(val value: T) {
+  private final class Entry(val value: Any, frames: Seq[DataFrame],
+      val sc: SparkContext) {
     private val refs = new AtomicInteger(1)
+    val rddIds: Seq[Int] = frames.flatMap(ColumnBridge.checkpointRddIds)
+    var bytes = 0L // last measurement; written under the map lock
     def retain(): Unit = refs.incrementAndGet()
     def releaseRef(): Unit =
-      if (refs.decrementAndGet() == 0) release(value)
+      if (refs.decrementAndGet() == 0) frames.foreach(releaseDf)
   }
 
-  // the PLAN participates in the MAP KEY (tuple equality → structural
-  // plan equality), so two different inputs under the same params are
-  // distinct ENTRIES — a value-side plan compare would silently
-  // overwrite one input's artifact with the other's and leak the
-  // replaced checkpoint without ever releasing it
+  // access-ordered: iteration runs least recently used first. The
+  // PLANS are part of the key (tuple equality → structural plan
+  // equality), so two inputs under the same params are distinct entries
   private val map =
-    new java.util.LinkedHashMap[(String, List[AnyRef]), Entry](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, List[AnyRef]), Entry]): Boolean = {
-        val evict = size > slots
-        if (evict) e.getValue.releaseRef() // drop the MAP's reference only
-        evict
+    new java.util.LinkedHashMap[(String, List[AnyRef]), Entry](16, 0.75f, true)
+
+  /** Total nanoseconds spent inside `build` blocks. Monotone; readers
+    * take before/after deltas (graft.Bench's per-gate `memo_build_s`).
+    * Builds are charged where they run, so the FIRST query to touch a
+    * shared relation carries its cost.
+    */
+  val buildNanos = new AtomicLong
+  /** Process-wide lookups that served a stored value / ran a build. */
+  val hitCount = new AtomicLong
+  val missCount = new AtomicLong
+  /** Entries dropped to bring the held bytes back under the budget. */
+  val evictions = new AtomicLong
+
+  private val kindHits = new ConcurrentHashMap[String, AtomicLong]()
+
+  /** Hits served for `kind` — what the reuse specs read to pin that a
+    * twin gate reused instead of silently rebuilding.
+    */
+  def hits(kind: String): Long =
+    Option(kindHits.get(kind)).map(_.get()).getOrElse(0L)
+
+  // test-only override of the block-manager budget (< 0 = none)
+  private val budgetOverride = new AtomicLong(-1L)
+
+  private[graft] def withBudget[A](bytes: Long)(body: => A): A = {
+    val prev = budgetOverride.getAndSet(bytes)
+    try body finally budgetOverride.set(prev)
+  }
+
+  /** The byte budget: storage memory across the block managers. */
+  def budget(sc: SparkContext): Long = {
+    val o = budgetOverride.get()
+    if (o >= 0) o else sc.getExecutorMemoryStatus.valuesIterator.map(_._1).sum
+  }
+
+  /** Re-measure every entry of `sc` and return their held bytes. */
+  def heldBytes(sc: SparkContext): Long = map.synchronized(measure(sc))
+
+  private def measure(sc: SparkContext): Long = {
+    val held = sc.getRDDStorageInfo.iterator
+      .map(ri => ri.id -> (ri.memSize + ri.diskSize)).toMap
+    var total = 0L
+    map.values.forEach { e =>
+      e.bytes = if (e.sc ne sc) 0L else e.rddIds.map(held.getOrElse(_, 0L)).sum
+      total += e.bytes
+    }
+    total
+  }
+
+  /** Drop least-recently-used entries that hold blocks until the held
+    * bytes fit the budget; `newest` (just built) always stays.
+    */
+  private def evictOverBudget(newest: Entry): Unit = {
+    val sc = newest.sc
+    var total = measure(sc)
+    val limit = budget(sc)
+    val it = map.values.iterator
+    while (total > limit && it.hasNext) {
+      val e = it.next()
+      if (e.bytes > 0 && (e ne newest)) {
+        it.remove()
+        e.releaseRef() // drop the MAP's reference only
+        evictions.incrementAndGet()
+        total -= e.bytes
       }
     }
-
-  /** Drop every entry (releasing the MAP's reference on each; blocks
-    * held by an in-flight query survive until its lease drains) — the
-    * session-teardown / leak-audit hook `PlanMemo.releaseAll` drives.
-    */
-  def clear(): Unit = map.synchronized {
-    val it = map.values.iterator
-    while (it.hasNext) it.next().releaseRef()
-    map.clear()
   }
-
-  /** Hit counter — exists so the reuse specs can pin that the twin
-    * gate actually reused instead of silently rebuilding.
-    */
-  val hits = new java.util.concurrent.atomic.AtomicLong
 
   /** Hand `e`'s value to the calling query: one reference taken now,
     * given back when the caller's Caches lease drains.
     */
-  private def lend(e: Entry): T = {
+  private def lend[T](e: Entry): T = {
     e.retain()
     Caches.onRelease(() => e.releaseRef())
-    e.value
+    e.value.asInstanceOf[T]
   }
 
-  /** Return the memoized value for (input plans, params), building and
-    * recording it on a miss. `input` is the relation whose canonical
-    * plan identifies the data; `extraInputs` are any FURTHER relations
-    * the built value depends on (a beam ranking depends on the graph
-    * AND the corpus AND the query batch) — every one participates in
-    * the key as a canonicalized plan OBJECT, so all inputs get the
-    * same structural-equality guarantee (digest strings in `params`
-    * would leave a hash collision silently serving the wrong value).
-    * `params` must carry every remaining constant the built value
-    * depends on. The returned value is guaranteed alive until the
-    * calling query's lease drains, whatever later calls evict.
+  /** Return the memoized `kind` value for (input plans, params),
+    * building and recording it on a miss. `input` is the relation whose
+    * canonical plan identifies the data; `extraInputs` are any FURTHER
+    * relations the built value depends on (a beam ranking depends on
+    * the graph AND the corpus AND the query batch) — every one
+    * participates in the key as a canonicalized plan OBJECT (digest
+    * strings in `params` would leave a hash collision silently serving
+    * the wrong value). `params` must carry every remaining constant the
+    * built value depends on. The returned value is guaranteed alive
+    * until the calling query's lease drains, whatever later calls evict.
     */
-  def getOrBuild(input: DataFrame, params: String,
-      extraInputs: Seq[DataFrame] = Nil)(build: => T): T = {
+  def getOrBuild[T](kind: String, input: DataFrame, params: String = "",
+      extraInputs: Seq[DataFrame] = Nil)(build: => T)(
+      implicit frames: Frames[T]): T = {
     val s = input.sparkSession
     val key = (s"${s.sparkContext.applicationId}|" +
-      s"${System.identityHashCode(s)}|$params",
+      s"${System.identityHashCode(s)}|$kind|$params",
       (input +: extraInputs).toList
         .map(_.queryExecution.analyzed.canonicalized: AnyRef))
     map.synchronized {
       val e = map.get(key)
       if (e != null) {
-        hits.incrementAndGet()
+        hitCount.incrementAndGet()
+        kindHits.computeIfAbsent(kind, _ => new AtomicLong).incrementAndGet()
         return lend(e)
       }
     }
-    // MISS: time the build and charge it to the process-wide counter —
-    // the bench samples `PlanMemo.buildNanos` around each timed query
-    // to attribute memo-build seconds per gate (`memo_build_s`), so a
-    // memoized gate's warm number stays interpretable as "the serve"
-    // without guessing which rep paid the build. The timer wraps ONLY
-    // the build closure (plan construction + checkpoint job), never the
-    // map bookkeeping — hits must read as zero build cost.
+    missCount.incrementAndGet()
+    // the timer wraps ONLY the build closure (plan construction +
+    // checkpoint job), never the map bookkeeping — hits must read as
+    // zero build cost
     val t0 = System.nanoTime()
     val v = build
-    PlanMemo.buildNanos.addAndGet(System.nanoTime() - t0)
+    buildNanos.addAndGet(System.nanoTime() - t0)
     map.synchronized {
       val prev = map.get(key)
       if (prev != null && prev.value != v) {
@@ -135,49 +203,37 @@ final class PlanMemo[T](slots: Int,
         // already be held by the racer that stored it, so the only
         // value that is provably unreferenced is the one WE just
         // built and have not yet returned — release v, serve prev.
-        release(v)
+        frames.of(v).foreach(releaseDf)
         lend(prev)
       } else {
-        val e = new Entry(v)
+        val e = new Entry(v, frames.of(v), s.sparkContext)
         map.put(key, e)
+        evictOverBudget(e)
         lend(e)
       }
     }
   }
-}
 
-object PlanMemo {
-  /** Total nanoseconds spent inside memo `build` blocks, summed across
-    * every PlanMemo instance in the process. Monotone; readers take
-    * before/after deltas (graft.Bench's per-gate `memo_build_s`
-    * attribution). Builds are charged where they run, so the FIRST
-    * query to touch a shared relation carries its cost — exactly the
-    * attribution question the bench field exists to answer.
+  /** Drop every entry (releasing the MAP's reference on each; blocks
+    * held by an in-flight query survive until its lease drains) — the
+    * hook a leak audit (or an embedding host tearing a session down)
+    * calls; entries otherwise hold their checkpoint blocks for the life
+    * of the session BY DESIGN (that reuse is their whole point).
     */
-  val buildNanos = new java.util.concurrent.atomic.AtomicLong
+  def releaseAll(): Unit = map.synchronized {
+    map.values.forEach(_.releaseRef())
+    map.clear()
+  }
 
-  private val instances =
-    new java.util.concurrent.ConcurrentLinkedQueue[PlanMemo[_]]()
-
-  private def register(m: PlanMemo[_]): Unit = instances.add(m)
-
-  /** Release every memo's entries across the process — the hook a
-    * leak audit (or an embedding host tearing a session down) calls;
-    * the memos otherwise hold their checkpoint blocks for the life of
-    * the session BY DESIGN (that reuse is their whole point).
+  /** Drop a released value's checkpoint blocks eagerly (GC-driven
+    * cleanup is lazy). Under the debug guard the release is also
+    * RECORDED, so any later job reading the dead checkpoint names this
+    * release site instead of failing with a bare missing-block error.
     */
-  def releaseAll(): Unit = instances.forEach(_.clear())
-
-  /** The standard release for DataFrame-valued memos: drop the
-    * checkpoint's cached blocks eagerly (GC-driven cleanup is lazy).
-    * Under the debug guard the release is also RECORDED, so any later
-    * job reading the dead checkpoint names this release site instead
-    * of failing with a bare missing-block error.
-    */
-  val releaseDf: org.apache.spark.sql.DataFrame => Unit =
-    df => try {
+  private def releaseDf(df: DataFrame): Unit =
+    try {
       if (MemoDebug.enabled) MemoDebug.recordRelease(df)
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(df)
+      ColumnBridge.unpersistCheckpoint(df)
     } catch { case scala.util.control.NonFatal(_) => () }
 }
 
@@ -185,7 +241,7 @@ object PlanMemo {
   * `sys.props` in a spec). The ref-count makes eviction safe, but one
   * hazard stays conventional: a served DataFrame that ESCAPES its
   * query's lease and is executed after `Caches.clear` drains it would
-  * read checkpoint blocks `releaseDf` already dropped — at best an
+  * read checkpoint blocks the release already dropped — at best an
   * obscure CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND from deep inside the
   * scan, at worst (blocks not yet evicted by the async unpersist) a
   * silently-served stale read. No in-repo caller violates the

@@ -140,57 +140,31 @@ object SparkEntry {
     * safe point. Idempotent per path; recursive delete, children
     * first.
     */
-  /** Session memo of the STORED BM25 SERVING TIER's scratch dirs —
-    * five gates (`text_bm25_indexed(+_recall)`, `text_bm25_prf_indexed
-    * (+_recall)`, `search_hybrid_indexed`) serve from the identical
-    * depth-256 postings + forward index over the identical corpus,
-    * and each used to refit and rewrite both relations
-    * (`postingsIndex(...).write` ×5). The memo performs the build on
-    * the FIRST request per (session, corpus plan, depth) and hands
-    * every later gate the same dirs — exactly the train-once/
-    * serve-many economics the stored tier preaches. The value is a
-    * pair of dir paths (nothing to unpersist — the parquet files are
-    * the artifact, cleaned by the shutdown hook); keying by the
-    * canonicalized CORPUS plan means a different sf dir or corpus
-    * filter rebuilds rather than aliasing. 2 slots: the harness
-    * interleaves at most two sf dirs in one session (verify + spec).
+  /** The STORED BM25 SERVING TIER's scratch dirs (postings index,
+    * forward index) — five gates (`text_bm25_indexed(+_recall)`,
+    * `text_bm25_prf_indexed(+_recall)`, `search_hybrid_indexed`) serve
+    * from the identical depth-256 postings + forward index over the
+    * identical corpus, so both are `storedDirLazy` artifacts of the
+    * corpus: built on the first request per (session, corpus plan,
+    * depth), served to every later gate.
     */
-  private val bm25IdxMemo = new PlanMemo[(String, String)](2)
-  private[graft] def bm25IdxMemoHits = bm25IdxMemo.hits
   private[graft] def bm25IndexDirs(s: SparkSession, d: String)
       : (String, String) = {
     import org.apache.spark.sql.functions.col
     val corpus = Tables.table(s, d, "documents")
       .filter(col("doc_id") >= TextOps.Bm25Queries)
-    // the scratch-dir LEAF carries a digest of the memo key (corpus
-    // plan + depth): a second, different corpus filter over the same
-    // sf dir gets DISTINCT dirs instead of overwriting the ones an
-    // older memo entry still serves — the dirs are as plan-keyed as
-    // the memo itself
-    val keyDigest = f"${scala.util.hashing.MurmurHash3.stringHash(
-      corpus.queryExecution.analyzed.canonicalized.toString +
-        "|" + TextOps.Bm25IndexDepth)}%08x"
-    bm25IdxMemo.getOrBuild(corpus, s"bm25idx|${TextOps.Bm25IndexDepth}") {
-      // same per-build nonce rule as storedDirWith: an evicted entry's
-      // rebuild must land in a fresh dir, never overwrite one a lazy
-      // reader from the old entry may still be scanning
-      val n = storedDirNonce.incrementAndGet()
-      val idxDir = ivfTmpDir(s, d, s"bm25_idx_${keyDigest}_b$n")
-      TextOps.postingsIndex(corpus, k = TextOps.Bm25IndexDepth)
-        .write.mode("overwrite").parquet(idxDir)
-      val lensDir = ivfTmpDir(s, d, s"bm25_lens_${keyDigest}_b$n")
-      TextOps.docLengths(corpus).write.mode("overwrite").parquet(lensDir)
-      (idxDir, lensDir)
-    }
+    (storedDirLazy(d, "bm25_idx", corpus, s"depth=${TextOps.Bm25IndexDepth}")(
+        TextOps.postingsIndex(corpus, k = TextOps.Bm25IndexDepth))(),
+      storedDirLazy(d, "bm25_lens", corpus, "")(TextOps.docLengths(corpus))())
   }
 
-  /** `bm25IndexDirs`' write-once economics GENERALIZED: a session memo
-    * of stored-artifact scratch dirs keyed by (leaf, FIT plan). Every
-    * stored-tier gate used to refit and rewrite its parquet artifact
-    * on each invocation — repeated bench reps paid the build inside
-    * the warm median, and gates sharing one fit (three PQ gates write
-    * the same codebooks, three IVF gates the same centroids, two SQ8
-    * gates the same stats+codes) each paid it again. The memo writes
+  /** A session memo of stored-artifact scratch dirs keyed by (leaf,
+    * FIT plan). Every stored-tier gate used to refit and rewrite its
+    * parquet artifact on each invocation — repeated bench reps paid
+    * the build inside the warm median, and gates sharing one fit
+    * (three PQ gates write the same codebooks, three IVF gates the
+    * same centroids, two SQ8 gates the same stats+codes) each paid it
+    * again. The memo writes
     * on the FIRST request per (session, leaf, fit plan) and serves the
     * dir path afterwards — train-once/serve-many, which is what the
     * stored tier preaches anyway. Identical fit plans under the same
@@ -198,26 +172,18 @@ object SparkEntry {
     *
     * The dir leaf carries a MurmurHash3 digest of (fit plan, leaf), so
     * a different corpus/filter writes a DISTINCT dir instead of
-    * overwriting one an older memo entry still serves (the
-    * bm25IndexDirs ADVICE lesson). Values are path strings — nothing
-    * to release; the parquet trees die with the JVM via the shutdown
-    * hook. 64 slots ≫ the ~19 artifacts × 2 interleaved sf dirs a
-    * session can touch, so eviction is not expected — and if it ever
-    * fires anyway, the per-build nonce below means the rebuild writes
-    * a FRESH dir rather than overwriting one a returned lazy reader
-    * may still be scanning.
+    * overwriting one an older memo entry still serves. Values are path
+    * strings — they hold no blocks, so they weigh nothing against the
+    * memo budget and are never evicted; the parquet trees die with the
+    * JVM via the shutdown hook.
     */
-  private val storedDirMemo = new PlanMemo[String](64)
-  private[graft] def storedDirMemoHits = storedDirMemo.hits
-  // per-BUILD nonce folded into every stored dir's leaf: unlike the
-  // DataFrame memos, path values get no ref-count protection, so if
-  // LRU eviction ever fired, a re-request would re-WRITE the evicted
-  // entry's deterministic dir in overwrite mode while a lazy reader
-  // returned from the old entry might still be scanning it. With the
-  // nonce, an eviction-then-rebuild writes a FRESH dir and the old
-  // tree stays readable until the session's shutdown hook sweeps it —
-  // correctness no longer leans on "64 slots ≫ live keys" holding
-  // forever.
+  // per-BUILD nonce folded into every stored dir's leaf: path values
+  // get no ref-count protection, so after `PlanMemo.releaseAll` a
+  // re-request would re-WRITE the dropped entry's deterministic dir in
+  // overwrite mode while a lazy reader returned from the old entry
+  // might still be scanning it. With the nonce, the rebuild writes a
+  // FRESH dir and the old tree stays readable until the session's
+  // shutdown hook sweeps it.
   private val storedDirNonce = new java.util.concurrent.atomic.AtomicLong
   private[graft] def storedDirWith(d: String, leaf: String,
       fit: org.apache.spark.sql.DataFrame)(
@@ -233,7 +199,7 @@ object SparkEntry {
     val plan = fit.queryExecution.analyzed.canonicalized
     val keyDigest = f"${scala.util.hashing.MurmurHash3.stringHash(
       plan.toString + "|" + leaf)}%08x${plan.hashCode}%08x"
-    storedDirMemo.getOrBuild(fit, s"storedDir|$leaf") {
+    PlanMemo.getOrBuild("storedDir", fit, s"fit|$leaf") {
       val dir = ivfTmpDir(s, d,
         s"${leaf}_${keyDigest}_b${storedDirNonce.incrementAndGet()}")
       write(fit, dir)
@@ -287,7 +253,7 @@ object SparkEntry {
     val plan = keyInput.queryExecution.analyzed.canonicalized
     val keyDigest = f"${scala.util.hashing.MurmurHash3.stringHash(
       plan.toString + "|" + leaf + "|" + params)}%08x${plan.hashCode}%08x"
-    storedDirMemo.getOrBuild(keyInput, s"storedDirLazy|$leaf|$params") {
+    PlanMemo.getOrBuild("storedDir", keyInput, s"input|$leaf|$params") {
       val dir = ivfTmpDir(s, d,
         s"${leaf}_${keyDigest}_b${storedDirNonce.incrementAndGet()}")
       write(fit, dir)

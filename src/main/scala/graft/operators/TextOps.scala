@@ -59,17 +59,12 @@ object TextOps {
     * deciles, calibration) deliberately keep the direct projection:
     * their PlanSpec contracts pin the one-pass pruned-scan shape, and
     * a per-row map consumer gains nothing from a checkpoint.
-    * `qualityMemoHits` exists for the spec.
     */
-  private val qualityMemo =
-    new graft.PlanMemo[DataFrame](2, graft.PlanMemo.releaseDf)
-  private[graft] def qualityMemoHits = qualityMemo.hits
-
   def qualityShared(docs: DataFrame): DataFrame = {
     val proj = docs.select(col("doc_id"), col("text"))
     val key = org.apache.spark.sql.graft.ColumnBridge.ofRows(
       docs.sparkSession, proj.queryExecution.optimizedPlan)
-    qualityMemo.getOrBuild(key, "quality") {
+    graft.PlanMemo.getOrBuild("quality", key) {
       org.apache.spark.sql.graft.ColumnBridge.statsFreeLocalCheckpoint(
         quality(key).select(col("doc_id"), col("quality")))
     }
@@ -145,14 +140,6 @@ object TextOps {
           "AND ns <= 8 * GREATEST(nt, 1L) THEN 1 ELSE 0 END) " +
           ">= 500 * GREATEST(nt, 1L) THEN 1 ELSE -1 END AS BIGINT) AS y")
 
-  /** Session memo of the fitted weight vector — three gates (the
-    * artifact, the scorer, the agreement honesty gate) consume the
-    * same fit back to back; the value is QmDims longs (nothing to
-    * release). Keyed by the corpus plan + every training constant.
-    */
-  private val qmMemo = new graft.PlanMemo[Array[Long]](2)
-  private[graft] def qmMemoHits = qmMemo.hits
-
   /** Fit the integer LMS / ADALINE model driver-side over the
     * hash-prefix sample (the `trainCentroids` discipline: a
     * cap-bounded deterministic sample collected to driver literals,
@@ -171,11 +158,17 @@ object TextOps {
     * agreement in `QmEpochs`. Magnitudes: steady-state w ~ T/|x| ≈
     * 10⁶–10⁷, scores ≤ 10¹⁰, gradients ≤ 256·10¹⁰·2000 ≈ 5·10¹⁵ —
     * inside long range with 1000× headroom.
+    *
+    * Session-memoized: three gates (the artifact, the scorer, the
+    * agreement honesty gate) consume the same fit back to back; the
+    * value is QmDims longs (no blocks, so it weighs nothing against
+    * the memo budget). Keyed by the corpus plan + every training
+    * constant.
     */
   private[graft] def qualityModelFit(docs: DataFrame,
       epochs: Int = QmEpochs, sampleCap: Int = QmSampleCap): Array[Long] =
-    qmMemo.getOrBuild(docs,
-        s"qm|$epochs|$sampleCap|$QmTarget|$QmStepScale") {
+    graft.PlanMemo.getOrBuild("qm", docs,
+        s"$epochs|$sampleCap|$QmTarget|$QmStepScale") {
       val rows = qmFeatures(docs)
         .withColumn("ch", poly_hash(col("doc_id").cast("string")))
         .orderBy(col("ch"), col("doc_id"))
@@ -808,7 +801,7 @@ object TextOps {
       .select("doc_id", "split", "keep_ppm")
   }
 
-  /** Single-slot memo of the DEFAULT-clusters curation relation —
+  /** Session memo of the DEFAULT-clusters curation relation —
     * `docs_curation` and `docs_manifest` both consume
     * `curation(docs)` over the same corpus back to back (the cluster
     * labelling inside it is already memoized; this covers the
@@ -817,12 +810,8 @@ object TextOps {
     * overload stays unmemoized: its identity with this form is the
     * spec-pinned law, not a reuse path.
     */
-  private val curationMemo =
-    new graft.PlanMemo[DataFrame](1, graft.PlanMemo.releaseDf)
-  private[graft] def curationMemoHits = curationMemo.hits
-
   def curationShared(docs: DataFrame): DataFrame =
-    curationMemo.getOrBuild(docs, "curation") {
+    graft.PlanMemo.getOrBuild("curation", docs) {
       org.apache.spark.sql.graft.ColumnBridge
         .statsFreeLocalCheckpoint(curation(docs))
     }
@@ -1470,19 +1459,15 @@ object TextOps {
       .groupBy("q_decile", "s_decile").agg(count(lit(1)).as("n"))
   }
 
-  /** Single-slot memo of the surprisal relation — `text_surprisal`
+  /** Session memo of the surprisal relation — `text_surprisal`
     * and `qualityCalibration` both pay the corpus bigram-LM build
     * (two corpus-sized shuffles) over the same docs back to back; the
     * artifact is one 3-long row per doc (the `defaultClusters`
     * precedent: per-doc label relations memoize well). Checkpoint-
     * backed, keyed by the docs plan — the standard discipline.
     */
-  private val surprisalMemo =
-    new graft.PlanMemo[DataFrame](1, graft.PlanMemo.releaseDf)
-  private[graft] def surprisalMemoHits = surprisalMemo.hits
-
   def surprisalShared(docs: DataFrame): DataFrame =
-    surprisalMemo.getOrBuild(docs, "surprisal") {
+    graft.PlanMemo.getOrBuild("surprisal", docs) {
       org.apache.spark.sql.graft.ColumnBridge
         .statsFreeLocalCheckpoint(surprisal(docs))
     }
@@ -2373,7 +2358,7 @@ object TextOps {
     bm25Score(c, qt.unionByName(expansion).distinct(), k)
   }
 
-  /** Single-slot memo of the DEFAULT exact-PRF ranking — the suite's
+  /** Session memo of the DEFAULT exact-PRF ranking — the suite's
     * two most expensive gates (`text_bm25_prf` and the stored tier's
     * honesty gate `text_bm25_prf_indexed_recall`) consume the
     * IDENTICAL corpus-bounded `bm25Prf(docs)` relation back to back;
@@ -2384,17 +2369,12 @@ object TextOps {
     * build). Checkpoint-backed so per-query `Caches.clear` can't
     * evict it; keyed by the canonicalized docs plan + every PRF
     * constant, so a stale reuse across corpora or parameters is
-    * structurally impossible. `prfMemoHits` exists for the reuse
-    * spec.
+    * structurally impossible.
     */
-  private val prfMemo =
-    new graft.PlanMemo[DataFrame](1, graft.PlanMemo.releaseDf)
-  private[graft] def prfMemoHits = prfMemo.hits
-
   def bm25PrfShared(docs: DataFrame, k: Int = Bm25K,
       nQueries: Long = Bm25Queries, fb: Int = PrfFeedbackDocs,
       ex: Int = PrfExpansionTerms): DataFrame =
-    prfMemo.getOrBuild(docs, s"bm25prf|$k|$nQueries|$fb|$ex") {
+    graft.PlanMemo.getOrBuild("bm25prf", docs, s"$k|$nQueries|$fb|$ex") {
       org.apache.spark.sql.graft.ColumnBridge
         .statsFreeLocalCheckpoint(bm25Prf(docs, k, nQueries, fb, ex))
     }
@@ -2405,15 +2385,11 @@ object TextOps {
     * pool at pool depth, and `text_bm25_indexed_recall`'s exact truth
     * side), and each re-paid the corpus tokenize + tf shuffle. The
     * ranking is a queries×k relation — a few hundred rows — so the
-    * checkpoint is ~free. 4 slots: 2 depths (k, pool) × 2 sf dirs.
+    * checkpoint is ~free.
     */
-  private val bm25Memo =
-    new graft.PlanMemo[DataFrame](4, graft.PlanMemo.releaseDf)
-  private[graft] def bm25MemoHits = bm25Memo.hits
-
   def bm25Shared(docs: DataFrame, k: Int = Bm25K,
       nQueries: Long = Bm25Queries): DataFrame =
-    bm25Memo.getOrBuild(docs, s"bm25|$k|$nQueries") {
+    graft.PlanMemo.getOrBuild("bm25", docs, s"$k|$nQueries") {
       org.apache.spark.sql.graft.ColumnBridge
         .statsFreeLocalCheckpoint(bm25(docs, k, nQueries))
     }
@@ -2431,15 +2407,11 @@ object TextOps {
     * The INCREMENTAL serve deliberately stays unmemoized: the delta
     * fold is that gate's measured operation, not a reusable artifact.
     */
-  private val idxServeMemo =
-    new graft.PlanMemo[DataFrame](8, graft.PlanMemo.releaseDf)
-  private[graft] def idxServeMemoHits = idxServeMemo.hits
-
   def bm25FromIndexShared(index: DataFrame, lens: DataFrame,
       queryDocs: DataFrame, k: Int = Bm25K,
       nQueries: Long = Bm25Queries): DataFrame =
-    idxServeMemo.getOrBuild(index,
-        s"bm25idx|$k|$nQueries", Seq(lens, queryDocs)) {
+    graft.PlanMemo.getOrBuild("idxServe", index,
+        s"bm25|$k|$nQueries", Seq(lens, queryDocs)) {
       org.apache.spark.sql.graft.ColumnBridge.statsFreeLocalCheckpoint(
         bm25FromIndex(index, lens, queryDocs, k, nQueries))
     }
@@ -2448,8 +2420,8 @@ object TextOps {
       queryDocs: DataFrame, k: Int = Bm25K,
       nQueries: Long = Bm25Queries, fb: Int = PrfFeedbackDocs,
       ex: Int = PrfExpansionTerms): DataFrame =
-    idxServeMemo.getOrBuild(index,
-        s"prfidx|$k|$nQueries|$fb|$ex", Seq(lens, queryDocs)) {
+    graft.PlanMemo.getOrBuild("idxServe", index,
+        s"prf|$k|$nQueries|$fb|$ex", Seq(lens, queryDocs)) {
       org.apache.spark.sql.graft.ColumnBridge.statsFreeLocalCheckpoint(
         bm25PrfFromIndex(index, lens, queryDocs, k, nQueries, fb, ex))
     }

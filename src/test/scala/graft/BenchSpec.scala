@@ -309,35 +309,46 @@ class BenchSpec extends SparkSpec {
 
   test("memo_build_s attributes PlanMemo build time to the gate that paid it") {
     // a memo-backed "gate": the first timed call pays the build (the
-    // closure sleeps, standing in for a checkpoint job), later calls
-    // hit. memo_build_s must charge the build to that gate, and a
-    // memo-free gate must be ABSENT from the field (sparse form).
-    val memo = new PlanMemo[String](slots = 2)
+    // closure sleeps, standing in for a checkpoint job) and misses,
+    // later calls hit. memo_build_s and memo_misses must charge the
+    // build to that gate, memo_hits its later calls, and a memo-free
+    // gate must be ABSENT from all three fields (sparse form). Every
+    // pass ends with the registry's held bytes, evictions and budget.
     val base = spark.range(3).toDF()
     val queries = scala.collection.immutable.ListMap(
       "memoized" -> q { s =>
-        memo.getOrBuild(base, "bench-spec-memo") {
+        PlanMemo.getOrBuild("bench-spec-memo", base) {
           Thread.sleep(30); "artifact"
         }
         s.range(10).toDF()
       },
       "plain" -> q(s => s.range(10).toDF()))
-    val acc = scala.collection.mutable.Map.empty[String, Double]
+    val memo = new Bench.MemoTraffic
     val samples = Bench.sample(spark, "unused", queries, reps = 3,
-      memoAcc = acc)
+      memo = memo)
     assert(samples.size === 3)
     // only the first call built; reps 2-3 hit (zero build charged)
-    assert(acc.contains("memoized"), acc)
-    assert(acc("memoized") >= 0.03, acc)
-    assert(acc("memoized") < 10.0, acc)
-    assert(!acc.contains("plain"), acc)
+    val use = memo.perGate("memoized")
+    assert(use.buildS >= 0.03, use)
+    assert(use.buildS < 10.0, use)
+    assert(use.misses === 1L && use.hits === 2L, use)
+    assert(!memo.perGate.contains("plain"), memo.perGate)
+    assert(memo.passes.size === 3, memo.passes)
+    assert(memo.passes.forall { case (bytes, evictions, budget) =>
+      bytes >= 0 && evictions == 0 && budget > 0 }, memo.passes)
     val (_, fileJson, _) = Bench.render(queries.keys.toSeq, samples, 3,
-      "sf-test", memoBuild = acc.toMap)
+      "sf-test", memo = memo)
     assert(fileJson.contains("\"memo_build_s\":{\"memoized\":"), fileJson)
     assert(!fileJson.contains("\"memo_build_s\":{\"memoized\":0.0,"),
       fileJson)
     assert(!fileJson.matches("(?s).*\"memo_build_s\":\\{[^}]*\"plain\".*"),
       fileJson)
-    memo.clear()
+    assert(fileJson.contains("\"memo_hits\":{\"memoized\":2}"), fileJson)
+    assert(fileJson.contains("\"memo_misses\":{\"memoized\":1}"), fileJson)
+    assert(fileJson.matches("(?s).*\"memo_bytes\":\\[\\d+,\\d+,\\d+\\].*"),
+      fileJson)
+    assert(fileJson.contains("\"memo_evictions\":[0,0,0]"), fileJson)
+    assert(fileJson.matches("(?s).*\"memo_budget\":[1-9]\\d*,.*"), fileJson)
+    PlanMemo.releaseAll()
   }
 }

@@ -288,99 +288,144 @@ class ExtensionsSpec extends SparkSpec {
     assert(res.passed, res.status.toString)
   }
 
+  // the registry's spec helpers: a checkpoint-backed frame of n rows,
+  // the RDD behind it, and the bytes its blocks hold once the listener
+  // bus has filled the status store
+  private def memoCk(n: Long): DataFrame =
+    org.apache.spark.sql.graft.ColumnBridge
+      .statsFreeLocalCheckpoint(spark.range(n).toDF())
+  private def ckRdd(df: DataFrame): org.apache.spark.rdd.RDD[_] =
+    df.queryExecution.analyzed.collectLeaves().collectFirst {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }.get
+  private def released(df: DataFrame): Boolean =
+    ckRdd(df).getStorageLevel == org.apache.spark.storage.StorageLevel.NONE
+  private def ckBytes(df: DataFrame): Long = {
+    org.apache.spark.sql.graft.ColumnBridge.waitListeners(spark)
+    val id = ckRdd(df).id
+    spark.sparkContext.getRDDStorageInfo.filter(_.id == id)
+      .map(ri => ri.memSize + ri.diskSize).sum
+  }
+
   test("PlanMemo: hit on same plan+params, miss across inputs/params, LRU eviction and clear() release") {
-    val released = scala.collection.mutable.ArrayBuffer[Int]()
-    val memo = new graft.PlanMemo[Int](2, released += _)
+    import graft.PlanMemo
+    PlanMemo.releaseAll()
+    val d0 = spark.range(5).toDF()
     val d1 = spark.range(1).toDF()
     val d2 = spark.range(2).toDF()
     val d3 = spark.range(3).toDF()
     var builds = 0
-    def b(v: Int): Int = { builds += 1; v }
-    graft.Caches.scoped {
-      assert(memo.getOrBuild(d1, "p")(b(1)) === 1)
-      assert(memo.getOrBuild(d1, "p")(b(-1)) === 1) // hit: build not run
-      assert(memo.hits.get() === 1L)
+    def b(n: Long): DataFrame = { builds += 1; memoCk(n) }
+    val hits0 = PlanMemo.hits("spec")
+    val ev0 = PlanMemo.evictions.get()
+    val (a, bb, c, d) = graft.Caches.scoped {
+      // a value that holds no blocks weighs 0: never evicted
+      assert(PlanMemo.getOrBuild("spec", d0, "dir")("spec-dir") ===
+        "spec-dir")
+      val a = PlanMemo.getOrBuild("spec", d1, "p")(b(200000))
+      assert(PlanMemo.getOrBuild("spec", d1, "p")(b(-1)) eq a) // hit
+      assert(PlanMemo.hits("spec") === hits0 + 1)
       assert(builds === 1)
       // different params and different input plans are distinct entries
-      assert(memo.getOrBuild(d1, "q")(b(10)) === 10)
-      assert(memo.getOrBuild(d2, "p")(b(2)) === 2) // LRU evicts (d1,"p")
-      assert(memo.getOrBuild(d1, "p")(b(5)) === 5) // rebuilt; evicts (d1,"q")
+      val bb = PlanMemo.getOrBuild("spec", d1, "q")(b(20000))
+      assert(PlanMemo.getOrBuild("spec", d1, "p")(b(-1)) eq a) // a is now MRU
+      assert(builds === 2)
+      val (ba, bbb) = (ckBytes(a), ckBytes(bb))
+      assert(ba > bbb && bbb > 0, s"$ba vs $bbb")
+      // over budget by less than bb: only the least recently used entry
+      // that holds blocks goes (bb), the zero-weight dir is skipped and
+      // the fresh build stays
+      val c = PlanMemo.withBudget(ba + bbb - 1) {
+        PlanMemo.getOrBuild("spec", d2, "p")(b(10))
+      }
+      assert(PlanMemo.evictions.get() === ev0 + 1)
+      assert(ckBytes(c) > 0)
+      // a budget nothing fits: every entry with blocks goes but the
+      // newest, least recently used first
+      val d = PlanMemo.withBudget(1) {
+        PlanMemo.getOrBuild("spec", d3, "p")(b(10))
+      }
+      assert(PlanMemo.evictions.get() === ev0 + 3)
+      assert(builds === 4)
       // eviction dropped only the MAP's reference — this query still
-      // holds both evicted values, so nothing is released yet
-      assert(released.isEmpty)
+      // holds every evicted value, so nothing is released yet
+      assert(!Seq(a, bb, c, d).exists(released))
+      assert(PlanMemo.getOrBuild("spec", d0, "dir")("rebuilt") ===
+        "spec-dir")
+      (a, bb, c, d)
     }
     // the lease drained: evicted values (and only those) released now
-    assert(released.sorted === Seq(1, 10))
-    released.clear()
-    memo.clear()
-    assert(released.sorted === Seq(2, 5))
+    assert(Seq(a, bb, c).forall(released) && !released(d))
     graft.Caches.scoped {
-      assert(memo.getOrBuild(d3, "p")(b(3)) === 3)
+      assert(PlanMemo.getOrBuild("spec", d3, "p")(b(-1)) eq d)
+      assert(builds === 4)
+      assert(PlanMemo.getOrBuild("spec", d1, "p")(b(7)) ne a) // rebuilt
     }
+    PlanMemo.releaseAll()
+    assert(released(d))
   }
 
   test("PlanMemo: LRU eviction cannot destroy a checkpoint an in-flight query holds") {
-    import org.apache.spark.sql.graft.ColumnBridge
-    val memo = new graft.PlanMemo[org.apache.spark.sql.DataFrame](
-      1, graft.PlanMemo.releaseDf)
     val d1 = spark.range(100).toDF()
     val d2 = spark.range(7).toDF()
-    var evictedRdd: org.apache.spark.rdd.RDD[_] = null
+    var evicted: DataFrame = null
     graft.Caches.scoped {
-      val a = memo.getOrBuild(d1, "cp")(
-        ColumnBridge.statsFreeLocalCheckpoint(d1))
-      evictedRdd = a.queryExecution.analyzed.collectLeaves().collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.get
-      // a second key evicts the first (slots = 1); under an
-      // immediate-release policy this would drop `a`'s checkpoint
-      // blocks HERE, and the count below would die with
+      evicted = graft.PlanMemo.getOrBuild("spec-lease", d1, "cp")(memoCk(100))
+      assert(ckBytes(evicted) > 0)
+      // a second key over a 1-byte budget evicts the first; under an
+      // immediate-release policy this would drop `evicted`'s
+      // checkpoint blocks HERE, and the count below would die with
       // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (the round-16 teardown bug
       // class, made structural)
-      memo.getOrBuild(d2, "cp")(ColumnBridge.statsFreeLocalCheckpoint(d2))
-      assert(evictedRdd.getStorageLevel.useMemory,
+      val ev0 = graft.PlanMemo.evictions.get()
+      graft.PlanMemo.withBudget(1) {
+        graft.PlanMemo.getOrBuild("spec-lease", d2, "cp")(memoCk(7))
+      }
+      assert(graft.PlanMemo.evictions.get() > ev0)
+      assert(ckRdd(evicted).getStorageLevel.useMemory,
         "evicted value's blocks must survive while this query holds it")
-      assert(a.count() === 100L,
+      assert(evicted.count() === 100L,
         "the lazily-consumed evicted value must still serve")
     }
     // lease drained → the last reference is gone → blocks released
-    assert(evictedRdd.getStorageLevel ===
-      org.apache.spark.storage.StorageLevel.NONE)
-    memo.clear()
+    assert(released(evicted))
+    graft.PlanMemo.releaseAll()
   }
 
   test("PlanMemo: a racing duplicate build resolves first-write-wins, releasing only the unreferenced loser") {
-    val released = scala.collection.mutable.ArrayBuffer[Int]()
-    val memo = new graft.PlanMemo[Int](2, released += _)
     val d1 = spark.range(1).toDF()
+    var loser: DataFrame = null
     // simulate the race reentrantly: the OUTER build runs outside the
     // lock; while it is "in flight" an inner caller builds and stores
-    // 7 first. The outer caller must then serve 7 (the incumbent a
-    // racer may already hold) and release only its own 8 — the value
-    // no other caller can have seen.
-    val got = memo.getOrBuild(d1, "race") {
-      assert(memo.getOrBuild(d1, "race")(7) === 7)
-      8
+    // its value first. The outer caller must then serve the incumbent
+    // (a racer may already hold it) and release only its own value —
+    // the one no other caller can have seen.
+    graft.Caches.scoped {
+      var first: DataFrame = null
+      val got = graft.PlanMemo.getOrBuild("spec-race", d1) {
+        first = graft.PlanMemo.getOrBuild("spec-race", d1)(memoCk(7))
+        loser = memoCk(8)
+        loser
+      }
+      assert(got eq first, "the incumbent (first write) must win the race")
+      assert(released(loser),
+        "the loser's own unreferenced value must be released")
+      assert(!released(first) && got.count() === 7L)
+      assert(graft.PlanMemo.getOrBuild("spec-race", d1)(memoCk(99)) eq first)
     }
-    assert(got === 7, "the incumbent (first write) must win the race")
-    assert(released === Seq(8),
-      "only the loser's own unreferenced value may be released")
-    assert(memo.getOrBuild(d1, "race")(99) === 7) // entry intact
+    graft.PlanMemo.releaseAll()
   }
 
   test("PlanMemo debug guard: a value executed AFTER its lease drained is flagged loudly, by release site") {
-    import org.apache.spark.sql.graft.ColumnBridge
-    val memo = new graft.PlanMemo[org.apache.spark.sql.DataFrame](
-      2, graft.PlanMemo.releaseDf)
     sys.props("graft.memo.debug") = "1"
     graft.MemoDebug.reset()
     try {
       // VIOLATE the convention: let the served frame escape its lease
       val escaped = graft.Caches.scoped {
-        memo.getOrBuild(spark.range(64).toDF(), "uar")(
-          ColumnBridge.statsFreeLocalCheckpoint(spark.range(64).toDF()))
+        graft.PlanMemo.getOrBuild("spec-uar", spark.range(64).toDF())(
+          memoCk(64))
       }
-      memo.clear() // map ref also gone → the release destructor ran
+      graft.PlanMemo.releaseAll() // map ref also gone → the release ran
       assert(graft.MemoDebug.useAfterRelease.get() === null,
         "no job has touched the released value yet — nothing to flag")
       // executing the escaped frame now reads released checkpoint
@@ -396,21 +441,22 @@ class ExtensionsSpec extends SparkSpec {
       val flagged = graft.MemoDebug.useAfterRelease.get()
       assert(flagged != null, "use-after-release was not flagged")
       assert(flagged.contains("USE-AFTER-RELEASE") &&
-        flagged.contains("released at"), flagged)
+        flagged.contains("released at") &&
+        flagged.contains("ExtensionsSpec"), flagged)
       // a LEGITIMATE serve (new build, lease open) must not be flagged
       graft.MemoDebug.reset()
       graft.Caches.scoped {
-        val ok = memo.getOrBuild(spark.range(32).toDF(), "uar2")(
-          ColumnBridge.statsFreeLocalCheckpoint(spark.range(32).toDF()))
+        val ok = graft.PlanMemo.getOrBuild("spec-uar", spark.range(32).toDF())(
+          memoCk(32))
         assert(ok.count() === 32L)
       }
-      ColumnBridge.waitListeners(spark)
+      org.apache.spark.sql.graft.ColumnBridge.waitListeners(spark)
       assert(graft.MemoDebug.useAfterRelease.get() === null,
         "a legitimate in-lease execution must not be flagged")
     } finally {
       sys.props.remove("graft.memo.debug")
       graft.MemoDebug.reset()
-      memo.clear()
+      graft.PlanMemo.releaseAll()
     }
   }
 
@@ -422,18 +468,18 @@ class ExtensionsSpec extends SparkSpec {
       .toSet
     val first = rows(TextOps.bm25PrfShared(docs))
     assert(first.nonEmpty)
-    val before = TextOps.prfMemoHits.get()
+    val before = graft.PlanMemo.hits("bm25prf")
     // the second consumer (the recall gate's exact side) must HIT and
     // serve the identical relation
     assert(rows(TextOps.bm25PrfShared(docs)) === first)
-    assert(TextOps.prfMemoHits.get() > before,
+    assert(graft.PlanMemo.hits("bm25prf") > before,
       "second bm25PrfShared call rebuilt instead of reusing the memo")
     // the memoized relation equals a fresh direct computation
     assert(rows(TextOps.bm25Prf(docs)) === first)
     // different PRF constants must MISS — no stale cross-param reuse
-    val hitsBefore2 = TextOps.prfMemoHits.get()
+    val hitsBefore2 = graft.PlanMemo.hits("bm25prf")
     TextOps.bm25PrfShared(docs, ex = 0).count()
-    assert(TextOps.prfMemoHits.get() === hitsBefore2,
+    assert(graft.PlanMemo.hits("bm25prf") === hitsBefore2,
       "different expansion constants must not reuse the memo")
   }
 
@@ -445,16 +491,16 @@ class ExtensionsSpec extends SparkSpec {
       .toSet
     val first = rows(TextOps.bm25Shared(docs))
     assert(first.nonEmpty)
-    val before = TextOps.bm25MemoHits.get()
+    val before = graft.PlanMemo.hits("bm25")
     assert(rows(TextOps.bm25Shared(docs)) === first)
-    assert(TextOps.bm25MemoHits.get() > before,
+    assert(graft.PlanMemo.hits("bm25") > before,
       "second bm25Shared call rebuilt instead of reusing the memo")
     // the memoized relation equals a fresh direct computation
     assert(rows(TextOps.bm25(docs)) === first)
     // hybridRrf's pool depth is a different key — no cross-depth reuse
-    val hitsBefore2 = TextOps.bm25MemoHits.get()
+    val hitsBefore2 = graft.PlanMemo.hits("bm25")
     TextOps.bm25Shared(docs, k = Similarity.RrfPool).count()
-    assert(TextOps.bm25MemoHits.get() === hitsBefore2,
+    assert(graft.PlanMemo.hits("bm25") === hitsBefore2,
       "different ranking depth must not reuse the memo")
   }
 
@@ -469,9 +515,9 @@ class ExtensionsSpec extends SparkSpec {
       .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
     val beam1 = rows(Similarity.knnBeamShared(g, emb, emb))
     assert(beam1.nonEmpty)
-    val beamBefore = Similarity.beamMemoHits.get()
+    val beamBefore = graft.PlanMemo.hits("beam")
     assert(rows(Similarity.knnBeamShared(g, emb, emb)) === beam1)
-    assert(Similarity.beamMemoHits.get() > beamBefore,
+    assert(graft.PlanMemo.hits("beam") > beamBefore,
       "second knnBeamShared call rebuilt instead of reusing")
     assert(rows(Similarity.knnBeam(g, emb, emb)) === beam1)
     // stored-index serve: recall twin + hybrid pool must reuse
@@ -486,16 +532,16 @@ class ExtensionsSpec extends SparkSpec {
     val lens = spark.read.parquet(base + "/lens")
     val serve1 = rows(TextOps.bm25FromIndexShared(idx, lens, docs))
     assert(serve1.nonEmpty)
-    val idxBefore = TextOps.idxServeMemoHits.get()
+    val idxBefore = graft.PlanMemo.hits("idxServe")
     assert(rows(TextOps.bm25FromIndexShared(idx, lens, docs)) === serve1)
-    assert(TextOps.idxServeMemoHits.get() > idxBefore,
+    assert(graft.PlanMemo.hits("idxServe") > idxBefore,
       "second bm25FromIndexShared call rebuilt instead of reusing")
     assert(rows(TextOps.bm25FromIndex(idx, lens, docs)) === serve1)
     // a different depth is a different key — no cross-depth reuse
-    val idxBefore2 = TextOps.idxServeMemoHits.get()
+    val idxBefore2 = graft.PlanMemo.hits("idxServe")
     TextOps.bm25FromIndexShared(idx, lens, docs,
       k = Similarity.RrfPool).count()
-    assert(TextOps.idxServeMemoHits.get() === idxBefore2,
+    assert(graft.PlanMemo.hits("idxServe") === idxBefore2,
       "different serve depth must not reuse the memo")
   }
 
@@ -505,9 +551,9 @@ class ExtensionsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     val first = rows(TextOps.curationShared(docs))
     assert(first.nonEmpty)
-    val before = TextOps.curationMemoHits.get()
+    val before = graft.PlanMemo.hits("curation")
     assert(rows(TextOps.curationShared(docs)) === first)
-    assert(TextOps.curationMemoHits.get() > before,
+    assert(graft.PlanMemo.hits("curation") > before,
       "second curationShared call rebuilt the pipeline")
     assert(rows(TextOps.curation(docs)) === first)
   }
@@ -520,9 +566,9 @@ class ExtensionsSpec extends SparkSpec {
       .toSet
     val first = rows(TextOps.surprisalShared(docs))
     assert(first.nonEmpty)
-    val before = TextOps.surprisalMemoHits.get()
+    val before = graft.PlanMemo.hits("surprisal")
     assert(rows(TextOps.surprisalShared(docs)) === first)
-    assert(TextOps.surprisalMemoHits.get() > before,
+    assert(graft.PlanMemo.hits("surprisal") > before,
       "second surprisalShared call rebuilt the bigram LM")
     assert(rows(TextOps.surprisal(docs)) === first)
   }
@@ -534,9 +580,9 @@ class ExtensionsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val first = cos(Similarity.knnBruteShared(emb))
     assert(first.nonEmpty)
-    val before = Similarity.bruteMemoHits.get()
+    val before = graft.PlanMemo.hits("brute")
     assert(cos(Similarity.knnBruteShared(emb)) === first)
-    assert(Similarity.bruteMemoHits.get() > before,
+    assert(graft.PlanMemo.hits("brute") > before,
       "second knnBruteShared call rebuilt the exact ranking")
     assert(cos(Similarity.knnBrute(emb)) === first)
     // the L2 flavor is a DIFFERENT entry (no cross-metric aliasing),
@@ -545,10 +591,10 @@ class ExtensionsSpec extends SparkSpec {
     assert(l2 === cos(Similarity.knnBruteL2(emb)))
     // truncated-dims keys its own entry: first call misses (no hit
     // increment), second call hits exactly once
-    val hits2 = Similarity.bruteMemoHits.get()
+    val hits2 = graft.PlanMemo.hits("brute")
     Similarity.knnBruteL2Shared(emb, dims = Similarity.TruncDims).count()
     Similarity.knnBruteL2Shared(emb, dims = Similarity.TruncDims).count()
-    assert(Similarity.bruteMemoHits.get() === hits2 + 1,
+    assert(graft.PlanMemo.hits("brute") === hits2 + 1,
       "the dims flavor must memoize separately and then hit")
   }
 
@@ -561,17 +607,17 @@ class ExtensionsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val first = rows(GraphOps.weightedEdgesShared(e))
     assert(first === Set((0L, 1L, 2L), (1L, 2L, 1L), (2L, 0L, 3L)))
-    val before = GraphOps.weMemoHits.get()
+    val before = graft.PlanMemo.hits("wedges")
     // the gates all pass the same derived edge frame — second call HITS
     assert(rows(GraphOps.weightedEdgesShared(e)) === first)
-    assert(GraphOps.weMemoHits.get() > before,
+    assert(graft.PlanMemo.hits("wedges") > before,
       "second weightedEdgesShared call rebuilt the compression")
     // identical to the unmemoized build
     assert(rows(GraphOps.weightedEdges(e)) === first)
     // a different edge relation must miss
-    val hits2 = GraphOps.weMemoHits.get()
+    val hits2 = graft.PlanMemo.hits("wedges")
     GraphOps.weightedEdgesShared(Seq((5L, 6L)).toDF("src", "dst")).count()
-    assert(GraphOps.weMemoHits.get() === hits2)
+    assert(graft.PlanMemo.hits("wedges") === hits2)
   }
 
   test("undSimpleShared memo: the undirected family reuses one symmetrize+simplify and peel loops never drop the shared frame") {
@@ -580,14 +626,14 @@ class ExtensionsSpec extends SparkSpec {
     // triangle + pendant, with duplicate and self edges to simplify away
     val e = Seq((0L, 1L), (1L, 0L), (1L, 2L), (2L, 0L), (0L, 0L),
       (1L, 2L), (2L, 3L)).toDF("src", "dst")
-    val before = GraphOps.undMemoHits.get()
+    val before = graft.PlanMemo.hits("undsimple")
     assert(GraphOps.labelPropagation(e, rounds = 2).collect().nonEmpty)
     // a second family member over the SAME edges hits the memo (the
     // modularity gate even hits twice: once in its LPA input, once
     // itself)
     assert(GraphOps.modularity(e,
       GraphOps.labelPropagation(e, rounds = 2)).collect().nonEmpty)
-    assert(GraphOps.undMemoHits.get() > before,
+    assert(graft.PlanMemo.hits("undsimple") > before,
       "the undirected family rebuilt undSimple instead of reusing it")
     // the peel loops guard their supersede-drop against the memo-owned
     // frame: kCore must run green TWICE over the same edges — if the
@@ -600,10 +646,10 @@ class ExtensionsSpec extends SparkSpec {
     assert(k1 === core(2) && k1.nonEmpty)
     assert(k1.map(_._1) === Set(0L, 1L, 2L)) // the triangle is the 2-core
     // a different edge relation must miss
-    val hits2 = GraphOps.undMemoHits.get()
+    val hits2 = graft.PlanMemo.hits("undsimple")
     GraphOps.kCore(Seq((7L, 8L)).toDF("src", "dst"), k = 1,
       localMax = 0L).count()
-    assert(GraphOps.undMemoHits.get() === hits2)
+    assert(graft.PlanMemo.hits("undsimple") === hits2)
   }
 
   test("distinctEdgesShared memo: the simple-digraph family reuses one distinct build and local fast paths never drop the shared frame") {
@@ -612,7 +658,7 @@ class ExtensionsSpec extends SparkSpec {
     // cycle + tail, with duplicate edges to dedup away
     val e = Seq((0L, 1L), (1L, 2L), (2L, 0L), (1L, 2L), (2L, 3L),
       (3L, 4L)).toDF("src", "dst")
-    val before = GraphOps.deMemoHits.get()
+    val before = graft.PlanMemo.hits("dedges")
     // hops takes the LOCAL path (collects the shared frame) — it must
     // not release the memo's checkpoint
     val seeds = Seq(0L).toDF("v")
@@ -623,7 +669,7 @@ class ExtensionsSpec extends SparkSpec {
     val scc = GraphOps.stronglyConnectedComponents(e).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(scc === Set((0L, 0L), (1L, 0L), (2L, 0L), (3L, 3L), (4L, 4L)))
-    assert(GraphOps.deMemoHits.get() > before,
+    assert(graft.PlanMemo.hits("dedges") > before,
       "the simple-digraph family rebuilt the distinct relation instead of reusing it")
     // the DISTRIBUTED consumers share the frame too: rerunning hops
     // distributed (localThreshold = 0) over the memoized relation must
@@ -632,10 +678,10 @@ class ExtensionsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(h2 === h1)
     // a different edge relation must miss
-    val hits2 = GraphOps.deMemoHits.get()
+    val hits2 = graft.PlanMemo.hits("dedges")
     GraphOps.hopDistances(Seq((7L, 8L)).toDF("src", "dst"),
       Seq(7L).toDF("v"), 2).count()
-    assert(GraphOps.deMemoHits.get() === hits2)
+    assert(graft.PlanMemo.hits("dedges") === hits2)
   }
 
   test("nearDupPairs memo: one verified build serves every threshold; a different corpus misses") {
@@ -644,18 +690,18 @@ class ExtensionsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val all = rows(Similarity.nearDupPairs(emb, threshold = -1.0))
     assert(all.nonEmpty)
-    val before = Similarity.nearDupMemoHits.get()
+    val before = graft.PlanMemo.hits("neardup")
     // the 0.30 default re-serves the memoized unfiltered relation;
     // expected = the Spark NaN-above-threshold semantics
     val cut = rows(Similarity.nearDupPairs(emb))
-    assert(Similarity.nearDupMemoHits.get() > before,
+    assert(graft.PlanMemo.hits("neardup") > before,
       "the 0.30 call rebuilt the verified relation instead of reusing it")
     assert(cut === all.filter(t => t._3.isNaN || t._3 >= 0.30))
     // a different corpus must MISS (and not serve the old pairs)
-    val hits2 = Similarity.nearDupMemoHits.get()
+    val hits2 = graft.PlanMemo.hits("neardup")
     val half = rows(Similarity.nearDupPairs(
       emb.filter(col("vec_id") % 2 === 0), threshold = -1.0))
-    assert(Similarity.nearDupMemoHits.get() === hits2)
+    assert(graft.PlanMemo.hits("neardup") === hits2)
     assert(half.subsetOf(all) && half != all)
   }
 
@@ -664,14 +710,14 @@ class ExtensionsSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val first = rows(Dedup.fuzzyPairs(docs))
-    val before = Dedup.fuzzyMemoHits.get()
+    val before = graft.PlanMemo.hits("fuzzy")
     assert(rows(Dedup.fuzzyPairs(docs)) === first)
-    assert(Dedup.fuzzyMemoHits.get() > before,
+    assert(graft.PlanMemo.hits("fuzzy") > before,
       "second fuzzyPairs call rebuilt the verified pairs")
     // a different corpus must miss
-    val hits2 = Dedup.fuzzyMemoHits.get()
+    val hits2 = graft.PlanMemo.hits("fuzzy")
     Dedup.fuzzyPairs(docs.filter(col("doc_id") % 2 === 0)).count()
-    assert(Dedup.fuzzyMemoHits.get() === hits2)
+    assert(graft.PlanMemo.hits("fuzzy") === hits2)
   }
 
   test("qualityShared memo: join-side consumers reuse one (doc_id, quality) build, decorated frames hit the same slot") {
@@ -681,17 +727,17 @@ class ExtensionsSpec extends SparkSpec {
     val direct = rows(TextOps.quality(docs).select("doc_id", "quality"))
     val shared = rows(TextOps.qualityShared(docs))
     assert(shared === direct && shared.nonEmpty)
-    val before = TextOps.qualityMemoHits.get()
+    val before = graft.PlanMemo.hits("quality")
     // a DECORATED frame (extra column the quality kernels never read)
     // collapses to the same pruned projection and must HIT
     assert(rows(TextOps.qualityShared(
       docs.withColumn("extra", col("doc_id") + 1))) === direct)
-    assert(TextOps.qualityMemoHits.get() > before,
+    assert(graft.PlanMemo.hits("quality") > before,
       "the decorated frame rebuilt quality instead of hitting the memo")
     // a genuinely different corpus must miss
-    val hits2 = TextOps.qualityMemoHits.get()
+    val hits2 = graft.PlanMemo.hits("quality")
     TextOps.qualityShared(docs.filter(col("doc_id") % 2 === 0)).count()
-    assert(TextOps.qualityMemoHits.get() === hits2)
+    assert(graft.PlanMemo.hits("quality") === hits2)
   }
 
   test("randomWalksShared memo: the skip-gram consumer reuses the walk table; different seeds miss") {
@@ -704,17 +750,17 @@ class ExtensionsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val first = rows(GraphOps.randomWalksShared(e, seeds))
     assert(first.nonEmpty)
-    val before = GraphOps.walkMemoHits.get()
+    val before = graft.PlanMemo.hits("walks")
     assert(rows(GraphOps.randomWalksShared(e, seeds)) === first)
-    assert(GraphOps.walkMemoHits.get() > before,
+    assert(graft.PlanMemo.hits("walks") > before,
       "second randomWalksShared call rebuilt the walk table")
     // identical to the unmemoized build
     assert(rows(GraphOps.randomWalks(e, seeds)) === first)
     // a different seed set must MISS — the cross-join key carries both
     // inputs' structure
-    val hits2 = GraphOps.walkMemoHits.get()
+    val hits2 = graft.PlanMemo.hits("walks")
     GraphOps.randomWalksShared(e, Seq(2L).toDF("v")).count()
-    assert(GraphOps.walkMemoHits.get() === hits2,
+    assert(graft.PlanMemo.hits("walks") === hits2,
       "different seeds must not reuse the memoized walks")
   }
 
@@ -782,10 +828,10 @@ class ExtensionsSpec extends SparkSpec {
     val w1 = TextOps.qualityModelFit(docs)
     assert(w1.length === TextOps.QmDims)
     // the fit is memoized: a second consumer reuses the same array
-    val before = TextOps.qmMemoHits.get()
+    val before = graft.PlanMemo.hits("qm")
     val w2 = TextOps.qualityModelFit(docs)
     assert(w2.toSeq === w1.toSeq)
-    assert(TextOps.qmMemoHits.get() > before)
+    assert(graft.PlanMemo.hits("qm") > before)
     // serving = sign of the literal dot product over the feature map
     val feats = TextOps.qmFeatures(docs).collect()
       .map(r => r.getLong(0) ->
@@ -833,10 +879,10 @@ class ExtensionsSpec extends SparkSpec {
   test("bm25IndexDirs memo: the five stored-tier gates share ONE index build per session") {
     val d = "/root/testdata/sf0.001"
     val first = SparkEntry.bm25IndexDirs(spark, d)
-    val before = SparkEntry.bm25IdxMemoHits.get()
+    val before = graft.PlanMemo.hits("storedDir")
     val second = SparkEntry.bm25IndexDirs(spark, d)
     assert(second === first)
-    assert(SparkEntry.bm25IdxMemoHits.get() > before,
+    assert(graft.PlanMemo.hits("storedDir") > before,
       "second bm25IndexDirs call rebuilt the stored index")
     // the dirs really hold the depth-256 index + forward index the
     // serving path expects
@@ -852,7 +898,7 @@ class ExtensionsSpec extends SparkSpec {
     val emb = spark.read.parquet(d + "/embeddings.parquet")
     val first = SparkEntry.storedDir(d, "spec_cents",
       Similarity.centroidsOf(emb))
-    val before = SparkEntry.storedDirMemoHits.get()
+    val before = graft.PlanMemo.hits("storedDir")
     // a SECOND, independently constructed but plan-equal fit (the
     // cross-gate sharing case: knn_ivf_stored / knn_ivf_pruned /
     // knn_ivf_pq_stored all fit centroidsOf over the same corpus)
@@ -860,7 +906,7 @@ class ExtensionsSpec extends SparkSpec {
     val second = SparkEntry.storedDir(d, "spec_cents",
       Similarity.centroidsOf(spark.read.parquet(d + "/embeddings.parquet")))
     assert(second === first)
-    assert(SparkEntry.storedDirMemoHits.get() > before,
+    assert(graft.PlanMemo.hits("storedDir") > before,
       "plan-equal second request rebuilt the stored artifact")
     // the dir really holds the fitted relation
     assert(spark.read.parquet(first).columns.contains("cent_id"))
@@ -967,19 +1013,19 @@ class ExtensionsSpec extends SparkSpec {
     val first = Dedup.defaultClusters(docs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(first.nonEmpty)
-    val before = Dedup.clusterMemoHits.get()
+    val before = graft.PlanMemo.hits("clusters")
     // the second consumer over the SAME corpus hits and is identical
     assert(Dedup.defaultClusters(docs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap === first)
-    assert(Dedup.clusterMemoHits.get() > before,
+    assert(graft.PlanMemo.hits("clusters") > before,
       "second defaultClusters call did not reuse the memoized labelling")
     // the memoized relation equals a fresh direct computation
     assert(Dedup.dupClusters(Dedup.ngramJaccard(docs)).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap === first)
     // a different corpus (same session) must miss — no stale reuse
-    val hitsBefore2 = Dedup.clusterMemoHits.get()
+    val hitsBefore2 = graft.PlanMemo.hits("clusters")
     Dedup.defaultClusters(docs.filter(col("doc_id") % 2 === 0)).count()
-    assert(Dedup.clusterMemoHits.get() === hitsBefore2,
+    assert(graft.PlanMemo.hits("clusters") === hitsBefore2,
       "a different corpus must not reuse the memoized labelling")
   }
 
@@ -989,8 +1035,12 @@ class ExtensionsSpec extends SparkSpec {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
+    // start from an empty registry: the defaultClusters spec already
+    // built the pairs of the filtered corpus below, and serving them
+    // again would be a correct hit, not the stale reuse this pins
+    graft.PlanMemo.releaseAll()
     val first = rows(Dedup.ngramJaccard(docs).select("doc_a", "doc_b"))
-    val before = Dedup.pairsMemoHits.get()
+    val before = graft.PlanMemo.hits("ngramJaccard")
     // a DECORATED frame over the same corpus (the cross-source gates'
     // shape) must hit — the memo keys on the projected (doc_id, text)
     val decorated = docs.withColumn("host",
@@ -998,12 +1048,12 @@ class ExtensionsSpec extends SparkSpec {
         (col("doc_id") % 3).cast("string")))
     assert(rows(Dedup.ngramJaccard(decorated).select("doc_a", "doc_b"))
       === first)
-    assert(Dedup.pairsMemoHits.get() > before,
+    assert(graft.PlanMemo.hits("ngramJaccard") > before,
       "decorated same-corpus call did not reuse the memoized pairs")
     // a different corpus (same session) must miss — no stale reuse
-    val hitsBefore2 = Dedup.pairsMemoHits.get()
+    val hitsBefore2 = graft.PlanMemo.hits("ngramJaccard")
     Dedup.ngramJaccard(docs.filter(col("doc_id") % 2 === 0)).count()
-    assert(Dedup.pairsMemoHits.get() === hitsBefore2,
+    assert(graft.PlanMemo.hits("ngramJaccard") === hitsBefore2,
       "a different corpus must not reuse the memoized pairs")
   }
 
@@ -1014,14 +1064,14 @@ class ExtensionsSpec extends SparkSpec {
     val first = Dedup.survivors(docs).select("doc_id").collect()
       .map(_.getLong(0)).toSet
     assert(first.nonEmpty)
-    val before = Dedup.survivorsMemoHits.get()
+    val before = graft.PlanMemo.hits("survivorIds")
     assert(Dedup.survivors(docs).select("doc_id").collect()
       .map(_.getLong(0)).toSet === first)
-    assert(Dedup.survivorsMemoHits.get() > before,
+    assert(graft.PlanMemo.hits("survivorIds") > before,
       "second survivors call did not reuse the memoized id set")
-    val hitsBefore2 = Dedup.survivorsMemoHits.get()
+    val hitsBefore2 = graft.PlanMemo.hits("survivorIds")
     Dedup.survivors(docs.filter(col("doc_id") % 2 === 0)).count()
-    assert(Dedup.survivorsMemoHits.get() === hitsBefore2,
+    assert(graft.PlanMemo.hits("survivorIds") === hitsBefore2,
       "a different corpus must not reuse the memoized id set")
   }
 

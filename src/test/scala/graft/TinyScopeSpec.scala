@@ -175,9 +175,12 @@ class TinyScopeSpec extends SparkSpec {
   test("no operator mutates a session conf (source guard)") {
     val root = new java.io.File("src/main/scala/graft/operators")
     assert(root.isDirectory, s"run from the repository root: $root")
-    val pat = """conf\.(un)?set\(""".r
-    val hits = root.listFiles().filter(_.getName.endsWith(".scala"))
-      .sortBy(_.getName).toSeq.flatMap { f =>
+    // and no gate hand-sizes a memo: every memo goes through the one
+    // byte-budgeted PlanMemo registry
+    val pat = """conf\.(un)?set\(|new (graft\.)?PlanMemo\b""".r
+    val hits = (root.listFiles().filter(_.getName.endsWith(".scala"))
+      .sortBy(_.getName).toSeq :+
+      new java.io.File("src/main/scala/graft/SparkEntry.scala")).flatMap { f =>
         val src = scala.io.Source.fromFile(f, "UTF-8")
         try src.getLines().zipWithIndex.collect {
           case (l, i) if pat.findFirstIn(l).isDefined =>
